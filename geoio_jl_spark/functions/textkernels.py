@@ -7,8 +7,9 @@ kernel is deterministic and versioned — its output must be **byte-identical
 per url** to the generated `text` column; tests pin sha256 golden hashes.
 
 Execution: extraction/unescape runs as an Arrow-batched pandas UDF
-(BinaryType → StringType); geotag lat/lon parse stays JVM-side
-(`regexp_extract`, whole-stage codegen) because it needs no unescaping.
+(BinaryType → StringType); ``extract_page`` fuses it with the geotag parse
+so html crosses to Python once.  ``geotag_lat``/``geotag_lon`` are the
+JVM-side (`regexp_extract`) reference parse for that kernel.
 No per-row Python UDFs anywhere (input_hint mandate).
 """
 
@@ -111,16 +112,18 @@ extract_page = _extract_page_det.asNondeterministic()
 
 
 def geotag_lat(html_str: Column) -> Column:
-    """<meta name="geo.position" content="{lat};{lon}"> → lat (JVM regexp)."""
+    """<meta name="geo.position" content="{lat};{lon}"> → lat (JVM regexp);
+    null when the page has no tag (``try_cast``: ANSI ``cast`` raises on
+    the empty match)."""
     return F.regexp_extract(
         html_str, r'geo\.position" content="(-?[0-9.]+);(-?[0-9.]+)"', 1
-    ).cast("double")
+    ).try_cast("double")
 
 
 def geotag_lon(html_str: Column) -> Column:
     return F.regexp_extract(
         html_str, r'geo\.position" content="(-?[0-9.]+);(-?[0-9.]+)"', 2
-    ).cast("double")
+    ).try_cast("double")
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,10 @@ Two-phase plan (SURVEY.md §4):
 
 1. **coarse** — polygons are tiled to integer cells (``cover_bbox_cells``,
    pure explode), points get their cell id (map-only); the spatial predicate
-   becomes a plain ``cell_id`` equi-join that Catalyst executes with its own
-   broadcast / sort-merge machinery (AQE picks at runtime).
+   becomes a plain ``cell_id`` equi-join.  ``point_in_polygon_join``
+   broadcasts the tile table, so the point side is never shuffled;
+   ``salted_point_in_polygon_join`` is the shuffle path for polygon tables
+   too large or too skewed to broadcast.
 2. **exact refine** — boundary-inclusive containment, either as pure int64
    column arithmetic (convex rings, no Python at all) or as an
    Arrow-batched numpy kernel over WKB for general polygons.
@@ -39,10 +41,9 @@ def point_in_polygon_join(
     px: str = "lon_i",
     py: str = "lat_i",
     wkb_col: str | None = "geometry",
-    broadcast_polygons: bool | None = None,
     refine=None,
 ) -> DataFrame:
-    """Coarse cell equi-join + exact refine.
+    """Coarse broadcast cell equi-join + exact refine.
 
     ``polygons`` must carry bbox columns (minx/miny/maxx/maxy) and either a
     WKB ``wkb_col`` (general path, numpy kernel) or a caller-supplied
@@ -52,18 +53,7 @@ def point_in_polygon_join(
     """
     tiled = tile_polygons(polygons, res)
     pts = assign_cells(points, px, py, res)
-    if broadcast_polygons is None:
-        # UDF-bearing plans can defeat AQE's size estimate (SURVEY.md §4.3):
-        # decide explicitly. First a cheap count of the *un-tiled* polygon
-        # side; only when that's small do we pay for the exact tile count
-        # (a huge polygon table never computes its tiling twice).
-        n_polys = polygons.count()
-        if n_polys > 100_000:
-            broadcast_polygons = False
-        else:
-            broadcast_polygons = tiled.count() <= 1_000_000
-    right = F.broadcast(tiled) if broadcast_polygons else tiled
-    joined = pts.join(right, "cell_id")
+    joined = pts.join(F.broadcast(tiled), "cell_id")
     if refine is not None:
         return refine(joined)
     return refine_with_wkb(joined, px, py, wkb_col)

@@ -46,7 +46,11 @@ def _docs_points(spark, sf_dir, skew: bool = False) -> DataFrame:
 
 def _triangles(spark, sf_dir) -> DataFrame:
     """Polygon side derived from nation (dialect.TRIANGLES_SQL) + bbox."""
-    nation = _read(spark, sf_dir, "nation")
+    return nation_triangles(_read(spark, sf_dir, "nation"))
+
+
+def nation_triangles(nation: DataFrame) -> DataFrame:
+    """One triangle per ``n_nationkey`` (dialect.TRIANGLES_SQL) + bbox."""
     t = nation.select(
         F.col("n_nationkey").cast("bigint").alias("poly_id"),
         F.expr(f"{D.TRI_CX} - {D.TRI_W}").cast("bigint").alias("ax"),
@@ -96,7 +100,6 @@ def q_pip_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = _triangles(spark, sf_dir)
     pairs = SJ.point_in_polygon_join(
         pts, polys, res=3, wkb_col=None, refine=_sign_test_refine,
-        broadcast_polygons=True,
     )
     return (
         pairs.groupBy("poly_id").agg(F.count("*").alias("n_docs"))

@@ -266,8 +266,7 @@ def stream_point_in_polygon(stream: DataFrame, polygons: DataFrame,
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         pairs = point_in_polygon_join(
-            batch_df, polygons, res=res, wkb_col="geometry",
-            broadcast_polygons=True, refine=refine,
+            batch_df, polygons, res=res, wkb_col="geometry", refine=refine,
         )
         output_fn(pairs, batch_id)
 

@@ -8,6 +8,11 @@
         --output /tmp/flagship_out \
         --checkpoints /tmp/flagship_ckpt --job-id run1
 
+``geotag_points`` and ``polygon_counts`` are the pipeline (web page →
+geotag → cell → point-in-polygon → per-polygon aggregate) and its only
+definition: ``tools/scaling_probe.pipeline`` and the flagship tests call
+the same two functions.
+
 On a cluster the same command line works with ``--master yarn``/k8s and
 N executors; everything below is master-agnostic.  Stages checkpoint via
 plans.checkpoint, so re-submitting with the same --job-id resumes after
@@ -20,8 +25,34 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def geotag_points(pages: DataFrame) -> DataFrame:
+    """Pages (url, html) → (doc_id, lon_i, lat_i, text_len) through the
+    fused ``extract_page`` kernel, so html crosses to Python once.  A page
+    without a geo.position tag keeps its row, with null coordinates."""
+    from geoio_jl_spark.functions.textkernels import extract_page
+    return pages.select("url", extract_page("html").alias("p")).select(
+        F.xxhash64("url").alias("doc_id"),
+        ((F.col("p.lon") + 180.0) * 100).cast("bigint").alias("lon_i"),
+        ((F.col("p.lat") + 85.0) * 100).cast("bigint").alias("lat_i"),
+        F.length("p.text").alias("text_len"))
+
+
+def polygon_counts(points: DataFrame, polygons: DataFrame,
+                   res: int = 3) -> DataFrame:
+    """Points → (poly_id, n, tc): the broadcast cell join of
+    ``point_in_polygon_join``, refined by the int64 triangle sign test over
+    the vertex columns of ``queries.nation_triangles``.  A point with null
+    coordinates has no cell and matches no polygon."""
+    from geoio_jl_spark.operators.sjoin import point_in_polygon_join
+    from geoio_jl_spark.queries import _sign_test_refine
+    pairs = point_in_polygon_join(points, polygons, res=res, wkb_col=None,
+                                  refine=_sign_test_refine)
+    return pairs.groupBy("poly_id").agg(
+        F.count("*").alias("n"), F.sum("text_len").alias("tc"))
 
 
 def main() -> None:
@@ -32,7 +63,6 @@ def main() -> None:
     ap.add_argument("--checkpoints", required=True)
     ap.add_argument("--job-id", default="flagship")
     ap.add_argument("--res", type=int, default=3)
-    ap.add_argument("--salt", type=int, default=16)
     ap.add_argument("--fail-after", default=None,
                     help="crash injection for the resume test: abort "
                          "(exit 7) right after this stage commits")
@@ -40,45 +70,19 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("geoio-flagship").getOrCreate()
     # --py-files puts the zip on workers; make sure the driver sees it too
-    from geoio_jl_spark import dialect as D
-    from geoio_jl_spark.functions.textkernels import geotag_lat, geotag_lon, html_to_text
-    from geoio_jl_spark.operators import sjoin as SJ
-    from geoio_jl_spark.operators.cells import assign_cells
     from geoio_jl_spark.plans.checkpoint import CheckpointedJob
     from geoio_jl_spark.queries import _triangles
 
     job = CheckpointedJob(spark, args.checkpoints, args.job_id)
-
-    def extract():
-        pages = spark.read.parquet(args.pages)
-        return pages.select(
-            "url", html_to_text("html").alias("text"),
-            geotag_lat(F.col("html").cast("string")).alias("lat"),
-            geotag_lon(F.col("html").cast("string")).alias("lon"))
-
-    extracted = job.stage("extract", extract)
+    points = job.stage(
+        "extract", lambda: geotag_points(spark.read.parquet(args.pages)))
     if args.fail_after == "extract":
         print("CRASH-INJECT after extract", file=sys.stderr)
         spark.stop()
         sys.exit(7)
 
-    def join_counts():
-        pts = extracted.select(
-            ((F.col("lon") + 180.0) * 100).cast("bigint").alias("lon_i"),
-            ((F.col("lat") + 85.0) * 100).cast("bigint").alias("lat_i"),
-            F.xxhash64("url").alias("doc_id"),
-            F.length("text").alias("text_len"))
-        polys = _triangles(spark, args.polygons_sf)
-        tiled = SJ.tile_polygons(polys, args.res).withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(args.salt - 1))))
-        pts2 = assign_cells(pts, res=args.res).withColumn(
-            "salt", F.pmod(F.hash("doc_id"), F.lit(args.salt)))
-        pairs = pts2.join(F.broadcast(tiled), ["cell_id", "salt"]).filter(
-            F.expr(D.point_in_triangle_sql("lon_i", "lat_i")))
-        return pairs.groupBy("poly_id").agg(
-            F.count("*").alias("n_docs"), F.sum("text_len").alias("total_chars"))
-
-    counts = job.stage("pip_counts", join_counts)
+    counts = job.stage("pip_counts", lambda: polygon_counts(
+        points, _triangles(spark, args.polygons_sf), args.res))
     counts.write.mode("overwrite").parquet(args.output)
     summary = {
         "polygons_matched": counts.count(),

@@ -56,7 +56,12 @@ def test_fused_extract_page_matches_separate_kernels(spark):
     from geoio_jl_spark.functions.textkernels import (
         extract_page, geotag_lat, geotag_lon,
     )
-    pages = webpages(spark, 1000).persist()
+    # page 7 loses its geo.position tag: both parses must give null lat/lon
+    untagged = F.regexp_replace(F.col("html").cast("string"),
+                                "geo.position", "description").cast("binary")
+    pages = webpages(spark, 1000).withColumn(
+        "html", F.when(F.col("url").endswith("/p/7"), untagged)
+        .otherwise(F.col("html"))).persist()
     fused = pages.select(
         "url", extract_page("html").alias("p")
     ).select("url", F.col("p.text").alias("text"),
@@ -67,6 +72,8 @@ def test_fused_extract_page_matches_separate_kernels(spark):
         geotag_lon(F.col("html").cast("string")).alias("lon"))
     assert fused.exceptAll(sep).count() == 0
     assert sep.exceptAll(fused).count() == 0
+    assert fused.filter(F.col("lat").isNull() & F.col("lon").isNull()) \
+        .count() == 1
     # negative coordinates survive (regression: marker-length off-by-one)
     neg = fused.filter(F.col("lat") < 0).count()
     assert neg > 0

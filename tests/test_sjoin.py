@@ -1,5 +1,5 @@
 """Spatial join tests: WKB refine path vs arithmetic refine, salting
-equivalence, bbox join vs naive theta join."""
+equivalence, bbox join vs naive theta join, no eager job at plan build."""
 
 import pandas as pd
 import pytest
@@ -53,15 +53,31 @@ def _expected_pairs(spark, points, triangles_wkb):
 
 def test_wkb_refine_matches_ground_truth(spark, points, triangles_wkb):
     got = SJ.point_in_polygon_join(
-        points, triangles_wkb, res=3, wkb_col="geometry", broadcast_polygons=True
+        points, triangles_wkb, res=3, wkb_col="geometry"
     ).select("doc_id", "poly_id").collect()
     got_set = {(r["doc_id"], r["poly_id"]) for r in got}
     assert got_set == _expected_pairs(spark, points, triangles_wkb)
 
 
+def test_point_in_polygon_join_launches_no_job_before_an_action(
+        spark, points, triangles_wkb):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("pip-plan-build", "point_in_polygon_join plan build")
+    try:
+        pairs = SJ.point_in_polygon_join(
+            points, triangles_wkb, res=3, wkb_col="geometry")
+        assert tracker.getJobIdsForGroup("pip-plan-build") == []
+        pairs.count()  # the tracker does see this group's jobs
+        assert tracker.getJobIdsForGroup("pip-plan-build") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_salted_join_equals_unsalted(spark, points, triangles_wkb):
     plain = SJ.point_in_polygon_join(
-        points, triangles_wkb, res=3, wkb_col="geometry", broadcast_polygons=True
+        points, triangles_wkb, res=3, wkb_col="geometry"
     ).select("doc_id", "poly_id").collect()
     salted = SJ.salted_point_in_polygon_join(
         points, triangles_wkb, res=3, point_id="doc_id", wkb_col="geometry",
@@ -92,7 +108,7 @@ def test_polygon_with_hole_via_wkb_path(spark):
         pd.DataFrame({"doc_id": [1, 2], "lon_i": [500, 2000], "lat_i": [500, 2000]})
     )
     got = SJ.point_in_polygon_join(
-        pts, holed, res=3, wkb_col="geometry", broadcast_polygons=True
+        pts, holed, res=3, wkb_col="geometry"
     ).select("doc_id").collect()
     assert [r["doc_id"] for r in got] == [1]  # (2000,2000) is inside the hole
 

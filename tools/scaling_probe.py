@@ -1,5 +1,8 @@
 """Run the flagship pipeline once at a given core count; print one JSON line.
 
+The pipeline is ``jobs/flagship_job.geotag_points`` + ``polygon_counts``;
+``pipeline`` only feeds them a pages table and the 25 nation triangles.
+
 Usage: python tools/scaling_probe.py <cores> <pages_parquet> [trials]
 """
 
@@ -10,34 +13,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from geoio_jl_spark import dialect as D
-from geoio_jl_spark.functions.textkernels import extract_page
-from geoio_jl_spark.operators import sjoin as SJ
-from geoio_jl_spark.operators.cells import assign_cells
-from geoio_jl_spark.queries import _triangles
+from geoio_jl_spark.queries import nation_triangles
 from geoio_jl_spark.session import get_spark
+from jobs.flagship_job import geotag_points, polygon_counts
 
 
 def pipeline(spark, path):
-    pages = spark.read.parquet(path)
-    # fused Arrow kernel: html crosses to Python once -> (text, lat, lon)
-    extracted = pages.select("url", extract_page("html").alias("p"))
-    pts = extracted.select(
-        ((F.col("p.lon") + 180.0) * 100).cast("bigint").alias("lon_i"),
-        ((F.col("p.lat") + 85.0) * 100).cast("bigint").alias("lat_i"),
-        F.xxhash64("url").alias("doc_id"),
-        F.length("p.text").alias("text_len"))
-    polys = _triangles(spark, "/root/testdata/sf0.001")
-    tiled_salted = SJ.tile_polygons(polys, 3).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(15))))
-    pts2 = assign_cells(pts, res=3).withColumn(
-        "salt", F.pmod(F.hash("doc_id"), F.lit(16)))
-    pairs = pts2.join(F.broadcast(tiled_salted), ["cell_id", "salt"]).filter(
-        F.expr(D.point_in_triangle_sql("lon_i", "lat_i")))
-    return pairs.groupBy("poly_id").agg(
-        F.count("*").alias("n"), F.sum("text_len").alias("tc"))
+    # TPC-H's nation table holds the keys 0..24 at every scale factor, so
+    # the 25 triangles need no input table
+    nation = spark.range(25).withColumnRenamed("id", "n_nationkey")
+    return polygon_counts(geotag_points(spark.read.parquet(path)),
+                          nation_triangles(nation))
 
 
 def main():
