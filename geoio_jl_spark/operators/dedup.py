@@ -12,6 +12,9 @@ in queries.py):
   bucket; feed operators/components.connected_components for keep/drop
 - minhash_lsh_pairs (opt-in): full per-bucket pair sets — quadratic per
   bucket; only when the downstream genuinely needs every pair
+- _lsh_bands: the one signature → (id, band, sig) banding step shared by
+  both MinHash operators above, the registry ``minhash_lsh`` query (via
+  minhash_lsh_pairs) and streaming.pipeline.stream_minhash_dedup
 - simhash_signatures: 32-bit simhash over token hashes
 - ngram_jaccard_pairs: distinct-shingle inverted index → pairs with exact
   intersection/union counts; the stop-shingle DF cap is ON by default
@@ -20,7 +23,7 @@ in queries.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geoio_jl_spark import dialect as D
@@ -86,29 +89,37 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def _lsh_bands(docs: DataFrame, text_col: str = "text",
+               id_col: str = "doc_id", fast_hash: bool = False) -> DataFrame:
+    """(id, band, sig) rows: each document's minhash signature cut into
+    MINHASH_BANDS bands, one row per band, ``sig`` the band's row values
+    joined with "_". One posexplode over an array of band keys, not a
+    per-band union that would recompute the signatures per band.
+    Documents with no shingle (null text, under 3 tokens) have no
+    signature and so no band row."""
+    sig = minhash_signatures(docs, text_col, id_col, fast_hash)
+    nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
+    band_arr = F.array(*[
+        F.concat_ws("_", *[f"mh{b * nr + r}" for r in range(nr)])
+        for b in range(D.MINHASH_BANDS)
+    ])
+    return sig.select(id_col, F.posexplode(band_arr).alias("band", "sig"))
+
+
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
     """Full per-bucket candidate pair sets — OPT-IN. A bucket of n docs
     emits n(n-1)/2 rows (a 10k-copy template page: 50M pairs); for
     dedup keep/drop use ``minhash_star_edges`` (n-1 rows per bucket,
     component-equivalent) + ``components.connected_components``."""
-    sig = minhash_signatures(docs, text_col, id_col)
-    nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
-    band_arr = F.array(*[
-        F.concat_ws("_", *[f"mh{b * nr + r}" for r in range(nr)])
-        for b in range(D.MINHASH_BANDS)
-    ])
-    # Single-pass bucket-list plan instead of a self-join: the r4 plan
-    # audit showed Spark does NOT reuse the shuffle stage across the two
-    # sides of the old allb⋈allb join (verified executed plans: the
-    # whole signature pipeline — scan, tokenize, shingle, 128 minhash
-    # aggs — ran twice, zero ReusedExchange, with and without AQE
-    # broadcast conversion).  groupBy(band, sig) → sorted id list →
-    # explode i<j pairs computes signatures ONCE and shuffles once
-    # (by bucket key) instead of twice; pair fanout is identical to the
-    # join's output and stays executor-side inside the explode.
-    allb = sig.select(id_col, F.posexplode(band_arr).alias("band", "sig"))
-    buckets = (allb.groupBy("band", "sig")
+    # Single-pass bucket-list plan instead of an allb⋈allb self-join,
+    # whose plan holds the signature pipeline once per side (AQE may
+    # reuse the partial-aggregate shuffle at run time, but the final
+    # min-aggregate and band explode still run twice).  groupBy(band,
+    # sig) → sorted id list → explode i<j pairs computes signatures
+    # once; pair fanout is identical to the join's output and stays
+    # executor-side inside the explode.
+    buckets = (_lsh_bands(docs, text_col, id_col).groupBy("band", "sig")
                .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
                .filter(F.size("ids") > 1))
     pair_sql = (
@@ -132,17 +143,10 @@ def minhash_star_edges(docs: DataFrame, text_col: str = "text",
     page: 10k edges, not 50M). Connected components over these star
     edges equal components over the full pair graph, so downstream
     keep/drop decisions are unchanged."""
-    sig = minhash_signatures(docs, text_col, id_col)
-    nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
-    band_arr = F.array(*[
-        F.concat_ws("_", *[f"mh{b * nr + r}" for r in range(nr)])
-        for b in range(D.MINHASH_BANDS)
-    ])
-    allb = sig.select(id_col, F.posexplode(band_arr).alias("band", "sig"))
-    from pyspark.sql import Window
     w = Window.partitionBy("band", "sig")
     return (
-        allb.withColumn("rep", F.min(id_col).over(w))
+        _lsh_bands(docs, text_col, id_col)
+        .withColumn("rep", F.min(id_col).over(w))
         .filter(F.col(id_col) != F.col("rep"))
         .select("rep", F.col(id_col).alias("member"))
         .distinct()

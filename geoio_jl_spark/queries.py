@@ -548,40 +548,17 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures + LSH banding → candidate pairs.
 
     shingle → md5-int hash → 16 universal-hash mins → 4 bands of 4 →
-    pairs sharing any band signature."""
-    from geoio_jl_spark.operators.dedup import exploded_shingles
+    pairs sharing any band signature (operators/dedup.py
+    minhash_lsh_pairs, columns renamed to doc_a/doc_b)."""
+    from geoio_jl_spark.operators.dedup import minhash_lsh_pairs
     docs = _read(spark, sf_dir, "documents")
-    # tokenize once per row before the shingle lambda — inlining the
-    # split inside transform() re-evaluates it per position (O(tokens²))
-    sh = exploded_shingles(docs).withColumn(
-        "h", F.expr(D.md5_int60("sh", "spark")) % F.lit(D.MINHASH_P)
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(D.MINHASH_P)).alias(f"mh{j}")
-        for j, (a, b) in enumerate(D.MINHASH_SEEDS)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
-    # one pass: posexplode an array of per-band signatures (vs a 4-way
-    # union that would recompute the signature pipeline per band)
-    band_arr = F.array(*[
-        F.concat_ws("_", *[f"mh{b * nr + r}" for r in range(nr)])
-        for b in range(D.MINHASH_BANDS)
-    ])
-    allb = sig.select(
-        "doc_id", F.posexplode(band_arr).alias("band", "sig")
-    )  # both join sides reuse one AQE shuffle stage; no cache leak
-    left = allb.alias("l")
-    right = allb.alias("r")
-    return (
-        left.join(right, ["band", "sig"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return minhash_lsh_pairs(docs).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
-def _sql_minhash_lsh() -> str:
+def _sql_minhash_bands() -> str:
+    """The oracles' shared ``sh``/``sig``/``bands`` CTEs (shingle hash,
+    signature, one row per band), as an open WITH clause."""
     nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
     mins = ", ".join(
         f"min(({a} * h + {b}) % {D.MINHASH_P}) AS mh{j}"
@@ -593,13 +570,17 @@ def _sql_minhash_lsh() -> str:
         )
         for b in range(D.MINHASH_BANDS)
     )
-    return f"""
-WITH sh AS (
+    return f"""WITH sh AS (
   SELECT doc_id, {D.md5_int60('s.sh', 'duckdb')} % {D.MINHASH_P} AS h
   FROM (SELECT doc_id, unnest({_shingles_duckdb()}) AS sh FROM documents) s
 ), sig AS (
   SELECT doc_id, {mins} FROM sh GROUP BY doc_id
-), bands AS ({band_selects})
+), bands AS ({band_selects})"""
+
+
+def _sql_minhash_lsh() -> str:
+    return f"""
+{_sql_minhash_bands()}
 SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
 FROM bands l JOIN bands r ON l.band = r.band AND l.sig = r.sig
 WHERE l.doc_id < r.doc_id
@@ -616,24 +597,8 @@ def q_minhash_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_minhash_star_edges() -> str:
-    nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
-    mins = ", ".join(
-        f"min(({a} * h + {b}) % {D.MINHASH_P}) AS mh{j}"
-        for j, (a, b) in enumerate(D.MINHASH_SEEDS)
-    )
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, concat_ws('_', {cols}) AS sig FROM sig".format(
-            b=b, cols=", ".join(f"mh{b * nr + r}" for r in range(nr))
-        )
-        for b in range(D.MINHASH_BANDS)
-    )
     return f"""
-WITH sh AS (
-  SELECT doc_id, {D.md5_int60('s.sh', 'duckdb')} % {D.MINHASH_P} AS h
-  FROM (SELECT doc_id, unnest({_shingles_duckdb()}) AS sh FROM documents) s
-), sig AS (
-  SELECT doc_id, {mins} FROM sh GROUP BY doc_id
-), bands AS ({band_selects}),
+{_sql_minhash_bands()},
 star AS (
   SELECT min(doc_id) OVER (PARTITION BY band, sig) AS rep, doc_id AS member
   FROM bands

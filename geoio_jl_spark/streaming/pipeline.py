@@ -311,20 +311,11 @@ def stream_minhash_dedup(stream: DataFrame, output_path: str,
     in no bucket is its own keeper.
 
     Returns the ``DataStreamWriter`` (caller starts it)."""
-    from geoio_jl_spark.operators.dedup import minhash_signatures
-    from geoio_jl_spark import dialect as D
-
-    nr = len(D.MINHASH_SEEDS) // D.MINHASH_BANDS
-    band_arr = F.array(*[
-        F.concat_ws("_", *[f"mh{b * nr + r}" for r in range(nr)])
-        for b in range(D.MINHASH_BANDS)
-    ])
+    from geoio_jl_spark.operators.dedup import _lsh_bands
 
     def process(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        sig = minhash_signatures(batch, text_col, id_col, fast_hash=True)
-        buckets = sig.select(
-            id_col, F.posexplode(band_arr).alias("band", "sig"))
+        buckets = _lsh_bands(batch, text_col, id_col, fast_hash=True)
         dup_ids = None
         # Probe the store through the Hadoop FileSystem API (works for
         # hdfs/s3 paths where driver-local os.path.exists would lie).

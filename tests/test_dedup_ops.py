@@ -117,6 +117,30 @@ def test_minhash_star_edges_linear_output(spark, corpus):
     assert len(edges) <= len(pairs)
 
 
+def test_minhash_empty_and_all_duplicate_inputs(spark):
+    """Edge inputs: an empty table gives no pairs and no edges; N copies
+    of one document form one bucket per band, so N(N-1)/2 pairs and N-1
+    star edges (rep = min id), while a null-text row and a row under 3
+    tokens have no shingle, hence no signature, and appear in neither."""
+    schema = "doc_id bigint, text string"
+    empty = spark.createDataFrame([], schema)
+    assert DD.minhash_lsh_pairs(empty).count() == 0
+    assert DD.minhash_star_edges(empty).count() == 0
+
+    n = 6
+    rows = [(i, doc_text(7)) for i in range(10, 10 + n)]
+    rows += [(1, None), (2, "two words")]
+    docs = spark.createDataFrame(rows, schema)
+    pairs = {(r["id_a"], r["id_b"])
+             for r in DD.minhash_lsh_pairs(docs).collect()}
+    ids = range(10, 10 + n)
+    assert pairs == {(a, b) for a in ids for b in ids if a < b}
+    assert len(pairs) == n * (n - 1) // 2
+    edges = {(r["rep"], r["member"])
+             for r in DD.minhash_star_edges(docs).collect()}
+    assert edges == {(10, m) for m in range(11, 10 + n)}
+
+
 def test_ngram_jaccard_cap_is_default(spark):
     """Round-3 default flip: a shingle hotter than DEFAULT_MAX_DF is
     dropped without asking; max_df=None opts back into unbounded."""
@@ -152,13 +176,16 @@ def test_dedup_plans_single_upstream(spark, sf_dir):
     bucket-list rework must keep the upstream single-pass: exactly one
     FileScan for minhash; at most one for ngram (its final plan reads
     the localCheckpoint'd pair-count RDD, so the scan count there is
-    0 in the last job)."""
+    0 in the last job).  The registry ``minhash_lsh`` query is held to
+    the same single scan."""
+    from geoio_jl_spark import queries as Q
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    mh = DD.minhash_lsh_pairs(docs)
-    mh.count()
-    plan = mh._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 1, plan
+    for mh in (DD.minhash_lsh_pairs(docs),
+               Q.registry()["minhash_lsh"][0](spark, sf_dir)):
+        mh.count()
+        plan = mh._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
 
     ng = DD.ngram_jaccard_pairs(docs)
     ng.count()

@@ -15,6 +15,8 @@ FAST = [
     # round-6 additions (fast at sf0.001; the slower bpe_encode is
     # covered by the full parity gate)
     "geohash_cells", "focal_mean", "pagerank", "bm25_score",
+    # the two MinHash-LSH operators (DuckDB oracles ~4 s and ~1.5 s here)
+    "minhash_lsh", "minhash_star_edges",
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
