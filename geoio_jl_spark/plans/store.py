@@ -7,16 +7,24 @@ Layout under ``store_dir``:
 
     base/                 compacted rows (one per key), epoch <= base_epoch
     delta/epoch=N/        per-ingest NEW + CHANGED rows only (CDC log)
-    manifest.json         {base_epoch, epochs: [...], counts per epoch}
+    manifest.json         {base_epoch, epochs: [...], counts per epoch,
+                           schema}
 
 Scale shape, deliberately NOT copy-on-write: an ingest writes ONLY its
 delta (O(changed rows)) — the 100-TB base is never rewritten per crawl
-batch.  Readers resolve the latest row per key with ONE partial-
-aggregable ``max_by(struct(...), epoch)`` groupBy (no window, no sort);
-``compact`` folds deltas into a new base when the delta tail grows.
-Change detection hashes content with ``xxhash64`` and classifies the
-incoming batch against the resolved view by a single key join —
-broadcast when the batch is small, AQE otherwise.
+batch.  The first ingest records the table schema in the manifest, and
+every later batch must match it (a drifted batch raises before it
+writes).  Every read — ``resolve``, ``compact``, ``changes`` and the
+count read-back in ``ingest`` — is ONE parquet scan over the base and
+delta directories with that schema: no footer (schema-inference) jobs,
+one ``FileScan`` instead of a union chain.  Readers resolve the latest
+row per key with ONE partial-aggregable ``max_by(struct(...), epoch)``
+groupBy (no window, no sort); ``compact`` folds deltas into a new base
+when the delta tail grows.  Change detection hashes content with
+``xxhash64`` and classifies the incoming batch by a single key join
+against the latest ``content_hash`` per key, a lookup that reads only
+``(key, content_hash, epoch)`` — the page columns are never read or
+shuffled for it.  AQE picks the join strategy.
 
 Idempotence: an epoch already in the manifest is skipped (re-submitting
 a failed/duplicated ingest is a no-op), so the job is safely retryable —
@@ -31,6 +39,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _OP_INSERT, _OP_UPDATE = "insert", "update"
 
@@ -76,6 +85,41 @@ def _base_dir(store_dir: str) -> str:
         "base/ or base_old/ directory (corrupt or mid-crash state)")
 
 
+def _scan(spark: SparkSession, man: dict,
+          paths: list[str]) -> DataFrame:
+    """One parquet scan of ``paths`` with the manifest's schema.  A
+    manifest without one was written before the schema was recorded;
+    its files are read with an inferred schema instead."""
+    reader = spark.read
+    if "schema" in man:
+        reader = reader.schema(T.StructType.fromJson(man["schema"]))
+    return reader.parquet(*paths)
+
+
+def _live(spark: SparkSession, store_dir: str,
+          as_of_epoch: int | None = None) -> DataFrame:
+    """Base + every delta after it (up to ``as_of_epoch``), as one
+    scan.  Raises on an empty store and on history folded by
+    compaction."""
+    man = read_manifest(store_dir)
+    if as_of_epoch is not None and man["base_epoch"] is not None \
+            and as_of_epoch < man["base_epoch"]:
+        raise ValueError(
+            f"epoch {as_of_epoch} predates the compacted base "
+            f"({man['base_epoch']}); that history has been folded")
+    paths = []
+    if man["base_epoch"] is not None:
+        paths.append(_base_dir(store_dir))
+    for e in man["epochs"]:
+        if as_of_epoch is not None and e > as_of_epoch:
+            continue
+        if man["base_epoch"] is None or e > man["base_epoch"]:
+            paths.append(_delta_dir(store_dir, e))
+    if not paths:
+        raise ValueError(f"empty store at {store_dir}")
+    return _scan(spark, man, paths)
+
+
 def resolve(spark: SparkSession, store_dir: str,
             key_col: str = "url",
             as_of_epoch: int | None = None) -> DataFrame:
@@ -86,29 +130,11 @@ def resolve(spark: SparkSession, store_dir: str,
     required at every read, priced as a single shuffle on the key.
 
     ``as_of_epoch`` gives TIME TRAVEL: the view as of that ingest epoch
-    (rows with epoch > N filtered out before the aggregation, so
-    Catalyst prunes whole delta directories).  Raises once compaction
-    has folded the requested history into a newer base — archive the
-    CDC tail downstream if older snapshots must stay reachable."""
-    man = read_manifest(store_dir)
-    if as_of_epoch is not None and man["base_epoch"] is not None \
-            and as_of_epoch < man["base_epoch"]:
-        raise ValueError(
-            f"epoch {as_of_epoch} predates the compacted base "
-            f"({man['base_epoch']}); that history has been folded")
-    parts = []
-    if man["base_epoch"] is not None:
-        parts.append(spark.read.parquet(_base_dir(store_dir)))
-    for e in man["epochs"]:
-        if as_of_epoch is not None and e > as_of_epoch:
-            continue
-        if man["base_epoch"] is None or e > man["base_epoch"]:
-            parts.append(spark.read.parquet(_delta_dir(store_dir, e)))
-    if not parts:
-        raise ValueError(f"empty store at {store_dir}")
-    allrows = parts[0]
-    for p in parts[1:]:
-        allrows = allrows.unionByName(p)
+    (delta directories after it are left out of the scan).  Raises once
+    compaction has folded the requested history into a newer base —
+    archive the CDC tail downstream if older snapshots must stay
+    reachable."""
+    allrows = _live(spark, store_dir, as_of_epoch)
     payload = [c for c in allrows.columns if c != key_col]
     picked = (allrows
               .groupBy(key_col)
@@ -118,17 +144,33 @@ def resolve(spark: SparkSession, store_dir: str,
                                     for c in payload])
 
 
+def _current_hashes(spark: SparkSession, store_dir: str,
+                    key_col: str) -> DataFrame:
+    """``(key, prev_hash)``: the latest ``content_hash`` per key — the
+    CDC lookup, projected to the three columns it needs before the
+    ``max_by`` so the page columns are neither read nor shuffled."""
+    return (_live(spark, store_dir)
+            .select(key_col, "content_hash", "epoch")
+            .groupBy(key_col)
+            .agg(F.max_by("content_hash", "epoch").alias("prev_hash")))
+
+
+def _columns(schema: T.StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
 def ingest(spark: SparkSession, store_dir: str, incoming: DataFrame,
            epoch: int, key_col: str = "url",
-           content_cols: tuple[str, ...] = ("text",),
-           broadcast_incoming: bool = True) -> dict:
+           content_cols: tuple[str, ...] = ("text",)) -> dict:
     """Upsert one crawl batch; returns the CDC counts.
 
     Writes ONLY new + changed rows (with ``op`` = insert/update and the
     replaced row's ``prev_hash``) to ``delta/epoch=N``; unchanged keys
     produce no bytes.  Duplicate keys inside the batch collapse to one
     deterministic winner (max content hash) before the diff.  A second
-    call with an already-ingested epoch is a no-op."""
+    call with an already-ingested epoch is a no-op.  A batch whose
+    columns or types differ from the store's raises ``ValueError``
+    before anything is written."""
     man = read_manifest(store_dir)
     if epoch in man["epochs"]:
         return {"epoch": epoch, "skipped": True,
@@ -147,27 +189,34 @@ def ingest(spark: SparkSession, store_dir: str, incoming: DataFrame,
            .select(key_col, *[F.col(f"_r.{c}").alias(c) for c in payload]))
     empty_store = not man["epochs"] and man["base_epoch"] is None
     if empty_store:
-        delta = (inc.withColumn("op", F.lit(_OP_INSERT))
-                 .withColumn("prev_hash",
-                             F.lit(None).cast("bigint")))
+        delta = inc.withColumn("prev_hash", F.lit(None).cast("bigint"))
     else:
-        cur = (resolve(spark, store_dir, key_col)
-               .select(key_col,
-                       F.col("content_hash").alias("prev_hash")))
-        side = F.broadcast(inc) if broadcast_incoming else inc
-        joined = side.join(cur, key_col, "left")
-        delta = (joined
+        delta = (inc.join(_current_hashes(spark, store_dir, key_col),
+                          key_col, "left")
                  .filter(F.col("prev_hash").isNull()
-                         | (F.col("prev_hash") != F.col("content_hash")))
-                 .withColumn("op",
-                             F.when(F.col("prev_hash").isNull(),
-                                    F.lit(_OP_INSERT))
-                             .otherwise(F.lit(_OP_UPDATE))))
-    delta = delta.withColumn("epoch", F.lit(epoch).cast("int"))
+                         | (F.col("prev_hash") != F.col("content_hash"))))
+    delta = delta.select(
+        key_col, *payload,
+        F.when(F.col("prev_hash").isNull(), F.lit(_OP_INSERT))
+         .otherwise(F.lit(_OP_UPDATE)).alias("op"),
+        "prev_hash",
+        F.lit(epoch).cast("int").alias("epoch"))
+    if "schema" in man:
+        want = T.StructType.fromJson(man["schema"])
+        if _columns(delta.schema) != _columns(want):
+            raise ValueError(
+                f"batch columns {_columns(delta.schema)} do not match "
+                f"the store's {_columns(want)}")
+        delta = delta.select(*want.fieldNames())
+    else:
+        # nullable, as every column reads back from parquet
+        man["schema"] = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in delta.schema]
+        ).jsonValue()
     out = _delta_dir(store_dir, epoch)
     delta.write.mode("overwrite").parquet(out)
     # harvest counts from what was actually written (restart-safe)
-    written = spark.read.parquet(out)
+    written = _scan(spark, man, [out])
     counts = {r["op"]: r["n"] for r in
               written.groupBy("op").agg(F.count("*").alias("n")).collect()}
     stats = {"inserted": int(counts.get(_OP_INSERT, 0)),
@@ -182,7 +231,7 @@ def ingest(spark: SparkSession, store_dir: str, incoming: DataFrame,
 def compact(spark: SparkSession, store_dir: str,
             key_col: str = "url") -> dict:
     """Fold base + deltas into a new base (one resolve + one write);
-    the delta tail resets.  Run when the tail makes resolve's union
+    the delta tail resets.  Run when the tail makes resolve's scan
     wide — the classic merge-on-read maintenance trade."""
     import shutil
     base = os.path.join(store_dir, "base")
@@ -237,11 +286,8 @@ def changes(spark: SparkSession, store_dir: str,
         raise ValueError(
             f"no delta epochs after {since_epoch} in {store_dir} "
             "(compaction folds the CDC tail into the base)")
-    dfs = [spark.read.parquet(_delta_dir(store_dir, e)) for e in epochs]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    return _scan(spark, man, [_delta_dir(store_dir, e) for e in epochs])
+
 
 def stats(spark: SparkSession, store_dir: str) -> DataFrame:
     """Manifest as a DataFrame: one row per ingest epoch with its CDC

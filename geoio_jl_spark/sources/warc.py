@@ -8,8 +8,10 @@ Common Crawl ships crawls as tens of thousands of ~1 GB ``.warc.gz``
 segments, so file-level parallelism saturates any cluster) →
 ``mapInPandas`` record parser (Arrow batches, pure Python record walk
 per file).  ``.warc.gz`` uses the standard record-at-a-time gzip-member
-convention; ``gzip.decompress`` consumes concatenated members in one
-call.
+convention: one segment holds thousands of small members, so they are
+inflated by one linear walk (:func:`_inflate_member`) that feeds
+``zlib`` bounded input slices — ``gzip.decompress`` copies the rest of
+the buffer for every member, which is quadratic in the member count.
 
 For SUB-file splits (one huge archive, or fewer files than cores),
 :func:`index_members` is the cdx-style one-pass index job — (file,
@@ -59,7 +61,7 @@ def parse_warc_bytes(data: bytes, fname: str = "",
     a deterministic raise would abort the ingest task for the entire
     ~1 GB file after every retry."""
     if data[:2] == b"\x1f\x8b":
-        data = gzip.decompress(data)     # concatenated members OK
+        data = _gunzip(data)
     out = []
     pos = 0
     n = len(data)
@@ -124,10 +126,75 @@ def parse_warc_bytes(data: bytes, fname: str = "",
     return out
 
 
+_FEED = 1 << 16
+# zlib.error messages for the gzip wrapper checks, as gzip.decompress
+# words them (it raises BadGzipFile for each; zlib only knows zlib.error)
+_WRAPPER_ERRORS = {"incorrect data check": "CRC check failed",
+                   "incorrect length check":
+                       "Incorrect length of data produced",
+                   "unknown compression method":
+                       "Unknown compression method"}
+
+
+def _inflate_member(view: memoryview, pos: int, sink,
+                    max_out: int = 0) -> int:
+    """Inflate the gzip member starting at ``view[pos]``, pass every
+    output slice to ``sink``, return the offset just past the member.
+
+    Input goes in ``_FEED``-byte slices, so ``unused_data`` (the input
+    past the member's end, which zlib copies out) is at most one slice
+    — never the rest of the buffer.  ``max_out`` > 0 caps each output
+    slice.  zlib checks the header, CRC and length itself; a truncated
+    member raises ``EOFError`` and a failed wrapper check
+    ``gzip.BadGzipFile``, the types ``gzip.decompress`` raises."""
+    d = zlib.decompressobj(31)
+    p, n = pos, len(view)
+    try:
+        while not d.eof:
+            if p >= n:
+                raise EOFError(
+                    "Compressed file ended before the end-of-stream "
+                    "marker was reached")
+            chunk = view[p:p + _FEED]
+            p += len(chunk)
+            out = d.decompress(chunk, max_out)
+            sink(out)
+            # drain a capped call: input left over, or a full slice
+            # that may have more output pending
+            while not d.eof and (d.unconsumed_tail
+                                 or (max_out and len(out) == max_out)):
+                out = d.decompress(d.unconsumed_tail, max_out)
+                sink(out)
+    except zlib.error as exc:
+        for needle, msg in _WRAPPER_ERRORS.items():
+            if needle in str(exc):
+                raise gzip.BadGzipFile(msg) from exc
+        raise
+    return p - len(d.unused_data)
+
+
+def _gunzip(data: bytes) -> bytes:
+    """``gzip.decompress`` in time linear in the member count: same
+    output, same checks, same exception types (NUL padding after a
+    member is skipped; anything else that is not a member raises
+    ``gzip.BadGzipFile``)."""
+    view = memoryview(data)
+    out: list[bytes] = []
+    pos, n = 0, len(view)
+    while pos < n:
+        if view[pos:pos + 2] != b"\x1f\x8b":
+            raise gzip.BadGzipFile(
+                f"Not a gzipped file ({bytes(view[pos:pos + 2])!r})")
+        pos = _inflate_member(view, pos, out.append)
+        while pos < n and view[pos] == 0:
+            pos += 1
+    return b"".join(out)
+
+
 def member_spans(data: bytes) -> list[tuple[int, int]]:
     """(offset, length) of every gzip member in a ``.warc.gz`` buffer.
 
-    Walks real member boundaries with ``zlib.decompressobj`` in 1 MiB
+    Walks real member boundaries with :func:`_inflate_member` in 1 MiB
     output slices that are immediately discarded — only offsets matter,
     so peak memory stays bounded no matter how large a member inflates.
     Raises on a truncated trailing member (an index must never silently
@@ -136,15 +203,13 @@ def member_spans(data: bytes) -> list[tuple[int, int]]:
     pos, n = 0, len(data)
     view = memoryview(data)
     while pos < n:
-        if data[pos:pos + 2] != b"\x1f\x8b":
+        if view[pos:pos + 2] != b"\x1f\x8b":
             raise ValueError(f"not a gzip member at byte {pos}")
-        d = zlib.decompressobj(31)
-        d.decompress(view[pos:], 1 << 20)
-        while not d.eof and d.unconsumed_tail:
-            d.decompress(d.unconsumed_tail, 1 << 20)
-        if not d.eof:
-            raise ValueError(f"truncated gzip member at byte {pos}")
-        end = n - len(d.unused_data)
+        try:
+            end = _inflate_member(view, pos, lambda _: None, 1 << 20)
+        except EOFError:
+            raise ValueError(
+                f"truncated gzip member at byte {pos}") from None
         spans.append((pos, end - pos))
         pos = end
     return spans
@@ -164,9 +229,6 @@ def index_members(spark: SparkSession, path: str) -> DataFrame:
     One linear pass per archive (file-level parallel via binaryFile);
     persist the result once per crawl and every later job reads with
     sub-file splits via :func:`read_indexed`."""
-    files = (spark.read.format("binaryFile")
-             .load(path.rstrip("/") + ("/*" if os.path.isdir(path) else "")))
-
     def _index(batches):
         for pdf in batches:
             rows = []
@@ -177,7 +239,7 @@ def index_members(spark: SparkSession, path: str) -> DataFrame:
             yield pd.DataFrame(
                 rows, columns=[f.name for f in INDEX_SCHEMA.fields])
 
-    return files.select("path", "content").mapInPandas(_index, INDEX_SCHEMA)
+    return _files(spark, path).mapInPandas(_index, INDEX_SCHEMA)
 
 
 def read_indexed(spark: SparkSession, path: str,
@@ -224,11 +286,17 @@ def read_indexed(spark: SparkSession, path: str,
     return spans.mapInPandas(_read_spans, SCHEMA)
 
 
+def _files(spark: SparkSession, path: str) -> DataFrame:
+    """``(path, content)`` of one archive, or of every archive in a
+    directory.  The directory itself is loaded, not a ``dir/*`` glob:
+    Spark's streaming-sink metadata probe fails on a glob path and logs
+    a full stack trace on every read."""
+    return (spark.read.format("binaryFile").load(path)
+            .select("path", "content"))
+
+
 def read(spark: SparkSession, path: str,
          strict: bool = True) -> DataFrame:
-    files = (spark.read.format("binaryFile")
-             .load(path.rstrip("/") + ("/*" if os.path.isdir(path) else "")))
-
     def _parse(batches):
         for pdf in batches:
             rows = []
@@ -239,7 +307,7 @@ def read(spark: SparkSession, path: str,
             yield pd.DataFrame(
                 rows, columns=[f.name for f in SCHEMA.fields])
 
-    return files.select("path", "content").mapInPandas(_parse, SCHEMA)
+    return _files(spark, path).mapInPandas(_parse, SCHEMA)
 
 
 def write(df: DataFrame, path: str, gzip_members: bool | None = None

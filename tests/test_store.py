@@ -206,3 +206,101 @@ def test_store_stats_view(spark, tmp_path):
     S.compact(spark, d)
     rows = {r["epoch"]: r for r in S.stats(spark, d).collect()}
     assert rows[2]["compacted"]
+
+
+def test_schema_drift_raises_before_writing(spark, tmp_path):
+    """A batch with a column the store does not have raises, writes no
+    delta, leaves the manifest as it was, and the store stays readable."""
+    import os
+
+    d = str(tmp_path / "store")
+    S.ingest(spark, d, _df(spark, [("u1", "a"), ("u2", "b")]), epoch=1)
+    S.ingest(spark, d, _df(spark, [("u2", "B")]), epoch=2)
+    man = S.read_manifest(d)
+    drifted = spark.createDataFrame([("u3", "c", "en")],
+                                    ["url", "text", "lang"])
+    with pytest.raises(ValueError, match="do not match"):
+        S.ingest(spark, d, drifted, epoch=3)
+    assert not os.path.exists(os.path.join(d, "delta", "epoch=3"))
+    assert S.read_manifest(d) == man
+    assert _resolved_dict(spark, d) == {"u1": "a", "u2": "B"}
+
+
+def test_every_epoch_writes_one_column_order(spark, tmp_path):
+    d = str(tmp_path / "store")
+    S.ingest(spark, d, _df(spark, [("u1", "a")]), epoch=1)
+    # same columns, other order: accepted and written in the store's order
+    S.ingest(spark, d, spark.createDataFrame([("b", "u2")], ["text", "url"]),
+             epoch=2)
+    cols = [spark.read.parquet(f"{d}/delta/epoch={e}").columns
+            for e in (1, 2)]
+    assert cols[0] == cols[1] == [
+        "url", "text", "content_hash", "op", "prev_hash", "epoch"]
+    assert _resolved_dict(spark, d) == {"u1": "a", "u2": "b"}
+
+
+def test_store_without_manifest_schema_still_reads(spark, tmp_path):
+    """A manifest written before the schema was recorded is read with
+    an inferred schema, and the next ingest records it."""
+    import json
+
+    d = str(tmp_path / "store")
+    S.ingest(spark, d, _df(spark, [("u1", "a"), ("u2", "b")]), epoch=1)
+    man = S.read_manifest(d)
+    del man["schema"]
+    with open(f"{d}/manifest.json", "w") as fh:
+        json.dump(man, fh)
+    assert _resolved_dict(spark, d) == {"u1": "a", "u2": "b"}
+    r = S.ingest(spark, d, _df(spark, [("u2", "B")]), epoch=2)
+    assert (r["inserted"], r["updated"]) == (0, 1)
+    assert "schema" in S.read_manifest(d)
+    assert _resolved_dict(spark, d) == {"u1": "a", "u2": "B"}
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixed_cost_job_counts(spark, tmp_path):
+    """Spark jobs per store call: an ingest into a store with three
+    delta epochs runs 6 (two shuffle map stages, one join build, the
+    delta write, and a map + result stage for the count read-back), a
+    compaction 2 (one shuffle, one write) — no schema-inference jobs.
+    Reading each directory with an inferred schema ran 10 and 6."""
+    d = str(tmp_path / "store")
+
+    def batch(e):
+        return _df(spark, [(f"u{i}", f"t{i}.{e if i % 3 == 0 else 0}")
+                           for i in range(200 * e)])
+
+    for e in (1, 2, 3):
+        S.ingest(spark, d, batch(e), epoch=e)
+    ingest_jobs = _jobs(spark, "store_ingest_jobs",
+                        lambda: S.ingest(spark, d, batch(4), epoch=4))
+    compact_jobs = _jobs(spark, "store_compact_jobs",
+                         lambda: S.compact(spark, d))
+    assert ingest_jobs <= 6 and compact_jobs <= 2, (ingest_jobs,
+                                                    compact_jobs)
+
+
+def test_cdc_lookup_reads_only_key_hash_epoch(spark, tmp_path):
+    """The change-detection lookup never reads the page columns."""
+    import re
+
+    d = str(tmp_path / "store")
+    pages = spark.createDataFrame(
+        [("u1", "<p>a</p>", "a"), ("u2", "<p>b</p>", "b")],
+        ["url", "html", "text"])
+    S.ingest(spark, d, pages, epoch=1)
+    S.ingest(spark, d, pages.limit(1), epoch=2)
+    plan = (S._current_hashes(spark, d, "url")
+            ._jdf.queryExecution().executedPlan().toString())
+    schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
+    assert schemas == ["struct<url:string,content_hash:bigint,epoch:int>"]

@@ -269,3 +269,62 @@ def test_read_indexed_accepts_prebuilt_index(spark, tmp_path):
     idx = warc.index_members(spark, p)
     got = warc.read_indexed(spark, p, index=idx, split_bytes=1 << 30)
     assert got.count() == 10
+
+
+def _members(*payloads):
+    return b"".join(gzip.compress(p, mtime=0) for p in payloads)
+
+
+def _random_members(seed, n, max_size):
+    import random
+    rng = random.Random(seed)
+    return _members(*[rng.randbytes(rng.randrange(0, max_size))
+                      for _ in range(n)])
+
+
+@pytest.mark.parametrize("blob", [
+    b"",
+    _random_members(7, 200, 3000),                       # many members
+    _members(b"a") + b"\x00" * 9 + _members(b"b", b"") + b"\x00" * 3,
+    _random_members(11, 5, 200_000),                     # several slices
+    _members(b"x" * (3 << 20), b"tail"),                 # inflates > 1 MiB
+], ids=["empty", "multi_member", "nul_padded", "random_payload", "large"])
+def test_gunzip_matches_gzip_decompress(blob):
+    assert warc._gunzip(blob) == gzip.decompress(blob)
+
+
+def _flip(blob, i):
+    b = bytearray(blob)
+    b[i] ^= 0x01
+    return bytes(b)
+
+
+@pytest.mark.parametrize("blob", [
+    _members(b"record one", b"record two" * 50)[:-5],    # truncated
+    _members(b"abc")[:6],                                # truncated header
+    _flip(_members(b"record one", b"crc" * 30), -8),     # CRC byte
+    _flip(_members(b"length" * 30), -1),                 # ISIZE byte
+    _members(b"record") + b"garbage",                    # trailing bytes
+    _members(b"record") + b"\x00\x00\x1f",               # after padding
+], ids=["truncated", "truncated_header", "crc", "length", "garbage",
+        "padded_garbage"])
+def test_gunzip_raises_like_gzip_decompress(blob):
+    with pytest.raises(Exception) as want:
+        gzip.decompress(blob)
+    with pytest.raises(Exception) as got:
+        warc._gunzip(blob)
+    assert got.type is want.type
+    assert want.type in (EOFError, gzip.BadGzipFile)
+
+
+def test_member_spans_large_members():
+    """Members that need several input slices and several 1 MiB output
+    slices still index to their exact byte ranges."""
+    import random
+    parts = [gzip.compress(p, mtime=0) for p in
+             (random.Random(3).randbytes(200_000), b"y" * (5 << 20), b"")]
+    spans, pos = [], 0
+    for p in parts:
+        spans.append((pos, len(p)))
+        pos += len(p)
+    assert warc.member_spans(b"".join(parts)) == spans
