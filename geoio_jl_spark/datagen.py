@@ -165,25 +165,3 @@ def geo_polygons_pdf(n: int = 25) -> pd.DataFrame:
     ])
     rows.append((n + 2, "collection", W.encode_wkb(coll)))
     return pd.DataFrame(rows, columns=["poly_id", "kind", "geometry"])
-
-
-def geo_grid_pdf(nx: int = 32, ny: int = 32, with_ts: bool = False) -> pd.DataFrame:
-    """Long-form cell table over an implicit CartesianGrid (FIXTURES.md §4)."""
-    cell = np.arange(nx * ny, dtype=np.int64)
-    i = cell % nx
-    j = cell // nx
-    lon = -10.0 + 0.5 * i
-    lat = 40.0 + 0.25 * j
-    ch1 = ((cell * 2654435761) % 1000) / 1000.0
-    ch2 = ((cell * 40503) % 1000) / 1000.0
-    mask = ((i >= 8) & (i < 24) & (j >= 8) & (j < 24)).astype(np.int8)
-    pdf = pd.DataFrame({
-        "cell_id": cell, "i": i.astype(np.int32), "j": j.astype(np.int32),
-        "lon": lon, "lat": lat, "channel1": ch1, "channel2": ch2, "mask": mask,
-    })
-    if with_ts:
-        pdf["tempanomaly"] = [
-            (((c * 7919 + np.arange(10) * 104729) % 2000) / 100.0 - 10.0).tolist()
-            for c in cell
-        ]
-    return pdf

@@ -8,7 +8,6 @@ they compose with any relational plan.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -101,16 +100,5 @@ def st_centroid_x(col) -> Column:
     def _udf(wkbs: pd.Series) -> pd.Series:
         out = W.wkb_centroid_batch([None if x is None else bytes(x) for x in wkbs])
         return pd.Series(out[:, 0])
-
-    return _udf(c)
-
-
-def st_centroid_y(col) -> Column:
-    c = _ensure(col)
-
-    @F.pandas_udf(DoubleType())
-    def _udf(wkbs: pd.Series) -> pd.Series:
-        out = W.wkb_centroid_batch([None if x is None else bytes(x) for x in wkbs])
-        return pd.Series(out[:, 1])
 
     return _udf(c)

@@ -228,16 +228,6 @@ def tm_projection(lat0: float, lon0: float, k0: float, fe: float,
     return fwd, inv
 
 
-def _lonlat_to_utm(zone: int, south: bool):
-    return tm_projection(0.0, zone * 6.0 - 183.0, 0.9996, 500000.0,
-                         10000000.0 if south else 0.0)[0]
-
-
-def _utm_to_lonlat(zone: int, south: bool):
-    return tm_projection(0.0, zone * 6.0 - 183.0, 0.9996, 500000.0,
-                         10000000.0 if south else 0.0)[1]
-
-
 # ---------------------------------------------------------------------------
 # Ellipsoidal Mercator (EPSG:3395), Lambert azimuthal equal-area
 # (EPSG:3035) and Albers equal-area (EPSG:5070) — Snyder closed forms on

@@ -145,16 +145,6 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda x: x != "")
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens_col(text))
-
-
-def stopword_hits(text: Column, lang: str) -> Column:
-    toks = tokens_col(text)
-    words = STOPWORDS[lang]
-    return F.size(F.filter(toks, lambda x: x.isin(*words) if len(words) > 1 else x == words[0]))
-
-
 def quality_columns(text: Column,
                     toks: Column | None = None) -> dict[str, Column]:
     """Length / punctuation / stopword-ratio quality features.

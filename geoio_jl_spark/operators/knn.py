@@ -24,7 +24,10 @@ Two physical strategies, both returning identical rows:
   stats overlap the rectangles instead of reading every row.
 
 Distances are squared-Euclidean in integer centidegrees (exact, hash-stable
-across engines); ties break on the point id.
+across engines).  Every plan ranks by (distance, point id) in one window
+(``_rank_topk``); the map-side selection (``_local_topk``) keeps the whole
+set tied at the k-th distance before cutting by that same order, so the
+partial plan is exact at any partition count.
 """
 
 from __future__ import annotations
@@ -40,19 +43,47 @@ from geoio_jl_spark import dialect
 from geoio_jl_spark.operators.cells import neighbor_cells
 
 
+def _local_topk(best: dict, q_ids: np.ndarray, score: np.ndarray,
+                ids: np.ndarray, k: int, keep: np.ndarray | None = None) -> None:
+    """Fold one batch's (Q, B) ``score`` matrix into ``best``: per query
+    id, the (scores, ids) of its k lowest rows by (score, id).  ``keep``
+    (Q, B) hides rows from a query.  Every row tied at the k-th score
+    survives the ``np.partition`` cut, so the lexsort by (score, id) keeps
+    the same k rows the merge window (``_rank_topk``) would."""
+    if keep is not None:
+        score = np.where(keep, score, np.inf)
+    kk = min(k, score.shape[1])
+    sel = score <= np.partition(score, kk - 1, axis=1)[:, kk - 1:kk]
+    if keep is not None:
+        sel &= keep
+    for qi in range(len(q_ids)):
+        cols = np.flatnonzero(sel[qi])
+        q = int(q_ids[qi])
+        s0, i0 = best.get(q, (score[qi, :0], ids[:0]))
+        s = np.concatenate([s0, score[qi, cols]])
+        i = np.concatenate([i0, ids[cols]])
+        order = np.lexsort((i, s))[:k]
+        best[q] = (s[order], i[order])
+
+
+def _rank_topk(partial: DataFrame, qid: str, score: str, id_col: str, k: int,
+               descending: bool = False) -> DataFrame:
+    """The one merge: ``row_number`` per query over (score, id), first k."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy(qid).orderBy(order, F.col(id_col).asc())
+    return (partial.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(qid, id_col, score, "rank"))
+
+
 def knn_join_window(points: DataFrame, queries: DataFrame, k: int,
                     px: str = "lon_i", py: str = "lat_i",
                     qid: str = "query_id", qx: str = "qx", qy: str = "qy",
                     point_id: str = "doc_id") -> DataFrame:
     cand = points.join(F.broadcast(queries))
     dist = (F.col(px) - F.col(qx)) ** 2 + (F.col(py) - F.col(qy)) ** 2
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
-    return (
-        cand.withColumn("dist2", dist.cast("bigint"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, point_id, "dist2", "rank")
-    )
+    return _rank_topk(cand.withColumn("dist2", dist.cast("bigint")),
+                      qid, "dist2", point_id, k)
 
 
 def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
@@ -71,36 +102,23 @@ def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
 
     def local_topk(batches):
         ids, xs, ys = bq.value
-        best: dict[int, list] = {}
+        best: dict = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            p_id = pdf[point_id].values.astype(np.int64)
             p_x = pdf[px].values.astype(np.int64)
             p_y = pdf[py].values.astype(np.int64)
             # (Q, B) squared distances, vectorized
             d2 = (p_x[None, :] - xs[:, None]) ** 2 + (p_y[None, :] - ys[:, None]) ** 2
-            kk = min(k, d2.shape[1])
-            part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-            for qi in range(len(ids)):
-                sel = part[qi]
-                rows = list(zip(d2[qi, sel].tolist(), p_id[sel].tolist()))
-                cur = best.setdefault(int(ids[qi]), [])
-                cur.extend(rows)
-                cur.sort()
-                del cur[k:]
-        out = [(q, pid, d) for q, rows in best.items() for d, pid in rows]
+            _local_topk(best, ids, d2, pdf[point_id].values.astype(np.int64), k)
+        out = [(q, pid, d) for q, (ds, pids) in best.items()
+               for d, pid in zip(ds.tolist(), pids.tolist())]
         yield pd.DataFrame(out, columns=[qid, point_id, "dist2"])
 
     partial = points.select(point_id, px, py).mapInPandas(
         local_topk, schema=f"{qid} long, {point_id} long, dist2 long"
     )
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(), F.col(point_id).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid, point_id, "dist2", "rank")
-    )
+    return _rank_topk(partial, qid, "dist2", point_id, k)
 
 
 def cell_count_stats(points: DataFrame, res: int,
@@ -312,10 +330,6 @@ def knn_join_pruned(points: DataFrame, queries: "DataFrame | list", k: int,
         on=[F.col(px) >= F.col("x_lo"), F.col(px) <= F.col("x_hi"),
             F.col(py) >= F.col("y_lo"), F.col(py) <= F.col("y_hi")])
     dist = (F.col(px) - F.col(qx)) ** 2 + (F.col(py) - F.col(qy)) ** 2
-    w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(),
-                                        F.col(point_id).asc())
-    return (cand.withColumn("dist2", dist.cast("bigint"))
-            .filter(F.col("dist2") <= F.col("d2_max"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(qid, point_id, "dist2", "rank"))
+    return _rank_topk(cand.withColumn("dist2", dist.cast("bigint"))
+                      .filter(F.col("dist2") <= F.col("d2_max")),
+                      qid, "dist2", point_id, k)

@@ -15,9 +15,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geoio_jl_spark.operators.knn import _local_topk, _rank_topk
 from geoio_jl_spark.shipping import ensure_pyfiles
 
 N_PLANES = 16
@@ -158,59 +159,64 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray,
     within those clusters only (partition pruning for vectors: the scan
     touches ~n_probe/K of the data).
 
-    ONE pass for the whole query batch: the query matrix + per-query
-    probe lists broadcast, the scan filters to the union of probed
+    ONE pass for the whole query batch: the query matrix + a per-query
+    probe mask broadcast, the scan filters to the union of probed
     clusters, and each Arrow batch scores every query against only its
     own clusters' rows (mask on the cluster column) — no per-query
     driver loop / per-query Spark job."""
-    spark = assigned.sparkSession
+    return _cosine_topk(assigned, query_df, k, id_col, emb_col, qid_col,
+                        qemb_col, centroids=centroids, n_probe=n_probe)
+
+
+def _cosine_topk(emb_df: DataFrame, query_df: DataFrame, k: int,
+                 id_col: str, emb_col: str, qid_col: str, qemb_col: str,
+                 centroids: np.ndarray | None = None,
+                 n_probe: int = 0) -> DataFrame:
+    """The one cosine kernel: broadcast the normalised query matrix,
+    score each Arrow batch with one matmul, fold it through
+    ``knn._local_topk`` on the negated cosine and merge the P×Q×k
+    survivors with ``knn._rank_topk``.  A query never matches its own id.
+    With ``centroids`` (IVF) each query also sees only the rows of its
+    ``n_probe`` nearest clusters, and the scan keeps only their union."""
+    spark = emb_df.sparkSession
     ensure_pyfiles(spark)
     qrows = query_df.select(qid_col, qemb_col).collect()
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
     q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    d2 = ((centroids[None, :, :] - q_mat[:, None, :]) ** 2).sum(axis=2)
-    probes = np.argsort(d2, axis=1)[:, :n_probe]  # (Q, n_probe)
-    all_probed = sorted({int(c) for c in probes.ravel()})
-    bq = spark.sparkContext.broadcast((q_ids, q_norm, probes))
-    sub = assigned.filter(F.col("ivf_cluster").isin(all_probed))
+    cols = [id_col, emb_col]
+    probed = None
+    if centroids is not None:
+        d2 = ((centroids[None, :, :] - q_mat[:, None, :]) ** 2).sum(axis=2)
+        # (Q, K) mask: row q marks the n_probe clusters query q probes
+        probed = np.zeros(d2.shape, dtype=bool)
+        np.put_along_axis(probed, np.argsort(d2, axis=1)[:, :n_probe], True,
+                          axis=1)
+        emb_df = emb_df.filter(F.col("ivf_cluster").isin(
+            np.flatnonzero(probed.any(axis=0)).tolist()))
+        cols.append("ivf_cluster")
+    bq = spark.sparkContext.broadcast((q_ids, q_norm, probed))
 
     def local_topk(batches):
         ids, qn, pr = bq.value
-        best: dict[int, list] = {}
+        best: dict = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             e_ids = pdf[id_col].values.astype(np.int64)
-            clusters = pdf["ivf_cluster"].values.astype(np.int64)
             mat = np.array(pdf[emb_col].tolist(), dtype=np.float64)
             mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = qn @ mat.T  # (Q, B)
-            for qi in range(len(ids)):
-                mask = np.isin(clusters, pr[qi]) & (e_ids != ids[qi])
-                cand = sims[qi][mask]
-                cids = e_ids[mask]
-                kk = min(k, len(cand))
-                if kk == 0:
-                    continue
-                sel = np.argpartition(-cand, kk - 1)[:kk]
-                cur = best.setdefault(int(ids[qi]), [])
-                cur.extend(zip((-cand[sel]).tolist(), cids[sel].tolist()))
-                cur.sort()
-                del cur[k:]
-        out = [(q, vid, -negcos) for q, rows in best.items()
-               for negcos, vid in rows]
+            keep = e_ids[None, :] != ids[:, None]
+            if pr is not None:
+                keep &= pr[:, pdf["ivf_cluster"].values.astype(np.int64)]
+            _local_topk(best, ids, -(qn @ mat.T), e_ids, k, keep)
+        out = [(q, vid, -negcos) for q, (negs, vids) in best.items()
+               for negcos, vid in zip(negs.tolist(), vids.tolist())]
         yield pd.DataFrame(out, columns=[qid_col, id_col, "cos"])
 
-    partial = sub.select(id_col, emb_col, "ivf_cluster").mapInPandas(
+    partial = emb_df.select(*cols).mapInPandas(
         local_topk, schema=f"{qid_col} long, {id_col} long, cos double")
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(),
-                                            F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, id_col, "cos", "rank")
-    )
+    return _rank_topk(partial, qid_col, "cos", id_col, k, descending=True)
 
 
 def write_ivf_index(assigned: DataFrame, centroids: np.ndarray,
@@ -240,46 +246,5 @@ def cosine_topk_partial(emb_df: DataFrame, query_df: DataFrame, k: int,
                         qid_col: str = "query_id",
                         qemb_col: str = "qe") -> DataFrame:
     """Map-side local top-k cosine via numpy matmul, then global merge."""
-    spark = emb_df.sparkSession
-    ensure_pyfiles(spark)
-    qrows = query_df.select(qid_col, qemb_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bq = spark.sparkContext.broadcast((q_ids, q_norm))
-
-    def local_topk(batches):
-        ids, qn = bq.value
-        best: dict[int, list] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            e_ids = pdf[id_col].values.astype(np.int64)
-            mat = np.array(pdf[emb_col].tolist(), dtype=np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = qn @ mat.T  # (Q, B)
-            for qi in range(len(ids)):
-                mask = e_ids != ids[qi]
-                cand = sims[qi][mask]
-                cids = e_ids[mask]
-                kk = min(k, len(cand))
-                if kk == 0:
-                    continue
-                sel = np.argpartition(-cand, kk - 1)[:kk]
-                cur = best.setdefault(int(ids[qi]), [])
-                cur.extend(zip((-cand[sel]).tolist(), cids[sel].tolist()))
-                cur.sort()
-                del cur[k:]
-        out = [(q, vid, -negcos) for q, rows in best.items()
-               for negcos, vid in rows]
-        yield pd.DataFrame(out, columns=[qid_col, id_col, "cos"])
-
-    partial = emb_df.select(id_col, emb_col).mapInPandas(
-        local_topk, schema=f"{qid_col} long, {id_col} long, cos double")
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(),
-                                            F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, id_col, "cos", "rank")
-    )
+    return _cosine_topk(emb_df, query_df, k, id_col, emb_col, qid_col,
+                        qemb_col)

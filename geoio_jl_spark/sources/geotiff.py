@@ -97,11 +97,6 @@ def _read_ifd_chain(buf: bytes):
     return e, ifds
 
 
-def _read_ifd(buf: bytes):
-    e, ifds = _read_ifd_chain(buf)
-    return e, ifds[0]
-
-
 def _affine_from_tags(tags) -> tuple[tuple, tuple]:
     if T_MODEL_TRANSFORM in tags:
         m = tags[T_MODEL_TRANSFORM]

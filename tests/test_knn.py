@@ -1,6 +1,7 @@
 """kNN join: the scalable map-side-partial plan must equal the window plan."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from geoio_jl_spark import dialect as D
@@ -51,6 +52,24 @@ def test_tie_break_deterministic(spark):
     rows = {r["rank"]: r["doc_id"]
             for r in KNN.knn_join_window(pts, qs, k=2).collect()}
     assert rows == {1: 10, 2: 20}
+
+
+@pytest.mark.parametrize("parts", [1, 3, 8])
+def test_partial_keeps_kth_tie_set(spark, parts):
+    """40 points tied at one distance from the query, k=5: the map-side
+    selection must keep the whole tie set so the (dist2, doc_id) merge
+    returns ids 1..5 at every partition count, like the window plan."""
+    pts = spark.createDataFrame(pd.DataFrame({
+        "doc_id": list(range(40, 0, -1)) + list(range(41, 61)),
+        "lon_i": [100] * 40 + [900] * 20, "lat_i": [100] * 60,
+    })).repartition(parts)
+    qs = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [0], "qx": [100], "qy": [101]}))
+    expect = [(0, i, 1, i) for i in range(1, 6)]
+    window = sorted(map(tuple, KNN.knn_join_window(pts, qs, k=5).collect()))
+    partial = sorted(map(tuple, KNN.knn_join_partial(pts, qs, k=5).collect()))
+    assert window == expect
+    assert partial == expect
 
 
 def test_pruned_equals_window(spark):

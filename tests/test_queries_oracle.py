@@ -17,6 +17,8 @@ FAST = [
     "geohash_cells", "focal_mean", "pagerank", "bm25_score",
     # the two MinHash-LSH operators (DuckDB oracles ~4 s and ~1.5 s here)
     "minhash_lsh", "minhash_star_edges",
+    # the two scale-path kNN plans, checked against knn_join's SQL_KNN
+    "knn_join_partial", "knn_join_pruned",
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

@@ -33,6 +33,33 @@ def test_partial_topk_matches_window(spark, emb_df):
             assert rows[(q, rank)] == vid, f"q={q} rank={rank}"
 
 
+@pytest.mark.parametrize("parts", [1, 3, 8])
+@pytest.mark.parametrize("plan", ["cosine_topk_partial", "ivf_search"])
+def test_topk_keeps_kth_tie_set(spark, plan, parts):
+    """40 identical vectors (ids 1..40) tie for the query's best cosine,
+    k=5: the exact and the IVF plan must return ids 1..5 at every
+    partition count, the same as a brute-force (cos desc, id asc) rank."""
+    rng = np.random.default_rng(5)
+    tied = np.eye(8)[0] * 2.0  # normalises to e1: every tied cos is exactly 1.0
+    vecs = [tied] * 40 + list(rng.normal(size=(20, 8)))
+    ids = list(range(1, 41)) + list(range(41, 61))
+    pdf = pd.DataFrame({"vec_id": ids, "embedding": [v.tolist() for v in vecs]})
+    emb = spark.createDataFrame(pdf.iloc[::-1]).repartition(parts)
+    q = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [0], "qe": [tied.tolist()]}))
+    mat = np.array(vecs) / np.linalg.norm(vecs, axis=1, keepdims=True)
+    cos = mat @ (tied / np.linalg.norm(tied))
+    brute = [ids[j] for j in np.lexsort((ids, -cos))[:5]]
+    assert brute == [1, 2, 3, 4, 5]
+    if plan == "ivf_search":
+        assigned, centroids = S.ivf_index(emb, k_centroids=1, n_iter=1)
+        got = S.ivf_search(assigned, centroids, q, k=5)
+    else:
+        got = S.cosine_topk_partial(emb, q, k=5)
+    rows = sorted((r["rank"], r["vec_id"]) for r in got.collect())
+    assert rows == [(r, vid) for r, vid in enumerate(brute, 1)]
+
+
 def test_ann_recall_on_near_duplicates(spark):
     # planted near-identical vectors must share an LSH bucket
     rng = np.random.RandomState(3)
