@@ -194,81 +194,43 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     are computed over the capped shingle sets, so the result is the
     exact Jaccard of the filtered feature space.
 
-    Plan shape (r5 rework — the r4 audit showed the old sh⋈sh self-join
-    plus the hot-list and sizes branches re-ran the tokenize+shingle
-    pipeline 8× per query, zero stage reuse): one inverted-index
-    groupBy(sh) → per-shingle sorted id list → explode i<=j pairs
-    (diagonal (a,a) rows carry each doc's kept-shingle count through
-    the SAME aggregate) → groupBy(id_a, id_b).  The upstream pipeline
-    runs exactly once; only the final small pair-count aggregate is
-    branched (diag vs off-diag vs joins), so THAT is the piece
-    materialized via ``localCheckpoint`` (plan truncation + block
-    reuse, auto-freed when the RDD is GC'd — same pattern as
-    operators/components.py; no CacheManager entry to leak across
-    calls).  Per-shingle pair fanout is bounded by max_df²/2.
-
-    r8 shuffle diet (guide §2.3/§2.4): ``collect_set`` already dedups
-    (sh, id), so the old ``.distinct()`` shuffle of every posting is
-    gone outright; and when the id range provably fits in 31 bits (one
-    tiny min/max agg over the id column) each (id_a, id_b) pair is
-    packed into ONE bigint through the quadratic explode + count —
-    half the bytes and a single-long hash key in the dominant
-    aggregate, unpacked only after counting."""
+    Plan shape: one inverted-index groupBy(sh) → per-shingle sorted id
+    list → explode i<=j pairs (diagonal (a,a) rows carry each doc's
+    kept-shingle count through the SAME aggregate) → groupBy(id_a,
+    id_b) → two windows, partitioned by id_a and by id_b, that read
+    each pair's n_sh(a) and n_sh(b) off the diagonal rows.  The plan is
+    one linear chain with no self-join and no ``localCheckpoint``, so
+    the tokenize+shingle pipeline runs exactly once and building the
+    plan launches no Spark job.  Per-shingle pair fanout is bounded by
+    max_df²/2; ``collect_set`` already dedups (sh, id), so no
+    ``.distinct()`` shuffle of the postings is needed; any int64 id
+    takes the same path."""
     sh = exploded_shingles(docs, text_col, id_col)
     buckets = (sh.groupBy("sh")
                .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
     if max_df is not None:
         buckets = buckets.filter(F.size("ids") <= max_df)
-    bounds = docs.agg(F.min(id_col).alias("lo"),
-                      F.max(id_col).alias("hi")).first()
-    packable = (bounds["lo"] is not None and int(bounds["lo"]) >= 0
-                and int(bounds["hi"]) < (1 << 31))
-    if packable:
-        # i<j pairs ++ diagonal (a,a) rows, packed a*2^32+b (exact:
-        # 0 <= a <= b < 2^31 keeps the product under 2^63, ANSI-safe)
-        contrib_sql = (
-            "concat("
-            "flatten(transform(ids, (a, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), "
-            "b -> a * 4294967296L + b))), "
-            "transform(ids, a -> a * 4294967296L + a))"
-        )
-        id_type = docs.schema[id_col].dataType
-        g = (buckets.select(F.explode(F.expr(contrib_sql)).alias("k"))
-             .groupBy("k")
-             .agg(F.count("*").alias("cnt"))
-             .select(F.shiftright("k", 32).cast(id_type).alias("id_a"),
-                     F.col("k").bitwiseAND(F.lit(4294967295))
-                     .cast(id_type).alias("id_b"),
-                     "cnt")
-             .localCheckpoint(eager=False))
-    else:
-        # i<j pairs (inter contributions) ++ diagonal (a,a) rows (each
-        # doc in the bucket once → per-doc kept-shingle counts = n_sh)
-        contrib_sql = (
-            "concat("
-            "flatten(transform(ids, (a, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), "
-            "b -> struct(a AS id_a, b AS id_b)))), "
-            "transform(ids, a -> struct(a AS id_a, a AS id_b)))"
-        )
-        g = (buckets.select(F.explode(F.expr(contrib_sql)).alias("p"))
-             .groupBy(F.col("p.id_a").alias("id_a"),
-                      F.col("p.id_b").alias("id_b"))
-             .agg(F.count("*").alias("cnt"))
-             .localCheckpoint(eager=False))
-    diag = g.filter(F.col("id_a") == F.col("id_b")).select(
-        F.col("id_a").alias("id"), F.col("cnt").alias("n_sh"))
-    pairs = (g.filter((F.col("id_a") < F.col("id_b"))
-                      & (F.col("cnt") >= min_inter))
-             .withColumnRenamed("cnt", "inter"))
+    # i<j pairs (inter contributions) ++ diagonal (a,a) rows (each doc
+    # in the bucket once → per-doc kept-shingle counts = n_sh)
+    contrib_sql = (
+        "concat("
+        "flatten(transform(ids, (a, i) -> "
+        "transform(slice(ids, i + 2, size(ids)), "
+        "b -> struct(a AS id_a, b AS id_b)))), "
+        "transform(ids, a -> struct(a AS id_a, a AS id_b)))"
+    )
+    diag = F.col("id_a") == F.col("id_b")
+    n_sh = F.max(F.when(diag, F.col("cnt")))
     return (
-        pairs.join(diag.select(F.col("id").alias("id_a"),
-                               F.col("n_sh").alias("na")), "id_a")
-        .join(diag.select(F.col("id").alias("id_b"),
-                          F.col("n_sh").alias("nb")), "id_b")
-        .select("id_a", "id_b", "inter",
-                (F.col("na") + F.col("nb") - F.col("inter")).alias("uni"))
+        buckets.select(F.explode(F.expr(contrib_sql)).alias("p"))
+        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        .agg(F.count("*").alias("cnt"))
+        .filter(diag | (F.col("cnt") >= min_inter))
+        .withColumn("na", n_sh.over(Window.partitionBy("id_a")))
+        .withColumn("nb", n_sh.over(Window.partitionBy("id_b")))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.col("cnt").alias("inter"),
+                (F.col("na") + F.col("nb") - F.col("cnt")).alias("uni"))
     )
 
 

@@ -522,81 +522,34 @@ def image_hashes(df: DataFrame, col: str = "image",
 
 def image_neardup_pairs(df: DataFrame, col: str = "image",
                         id_col: str = "doc_id", kind: str = "dhash",
-                        max_hamming: int = 7, bands: int = 8) -> DataFrame:
-    """Near-duplicate image pairs: perceptual hash → ``bands`` byte
-    bands → bucket join → exact popcount filter.
+                        max_hamming: int = 7) -> DataFrame:
+    """Near-duplicate image pairs: perceptual hash → 4 × 16-bit bands
+    with 1-bit probes → (band, value) equi-self-join → exact popcount
+    filter.  → (id_a, id_b, hamming).
 
-    EXACT for ``max_hamming < bands`` (pigeonhole: two hashes within
-    that Hamming distance must agree on at least one whole band, so no
-    qualifying pair can miss every bucket); wider radii are best-effort
-    and rejected here to keep the contract honest.  Single-pass plan
-    (the round-5 dedup shape): one hash computation, groupBy(band,
-    value) → sorted (id, hash) lists → explode i<j pairs →
-    ``bit_count(xor) <= max_hamming`` — never a hash self-join.
-    → (id_a, id_b, hamming).
+    EXACT for ``max_hamming ≤ 7`` (pigeonhole: two hashes within 7 bits
+    differ by at most 1 bit in SOME 16-bit band, so the multiprobe
+    co-buckets every qualifying pair; see ``_neardup_multiprobe``);
+    wider radii have no completeness guarantee and are rejected here to
+    keep the contract honest.
 
-    r8 rework (was: groupBy-bucket → sorted member list → interpreted
-    ``transform``/``slice`` pair explode → full-shuffle ``.distinct``):
-
-    * the hash table is localCheckpoint'd ONCE, so the two sides of a
-      plain (band, val) equi-self-join read the materialized 16-byte
-      rows instead of re-running the decode+hash UDF per side (the
-      double-computation that originally forced the bucket-list shape);
+    * the hash table is localCheckpoint'd ONCE, so the two sides of the
+      join read the materialized 16-byte rows instead of re-running the
+      decode+hash UDF per side;
     * candidate pairs are enumerated by the codegen hash join itself —
       no interpreted lambda, no per-bucket O(n²) array slicing, and a
-      hot bucket is a skewed JOIN key that AQE can split, where the old
-      single giant bucket-array row could not be;
-    * a qualifying pair agrees on every band in a non-empty set M and
-      used to be emitted |M| times then deduped with a full shuffle
-      ``.distinct()``; keeping a pair only in its FIRST matching band
-      (both members sit in that bucket by definition) emits each pair
-      exactly once, so the distinct shuffle is gone (guide §2.4).
-    Same rows out."""
-    if max_hamming >= bands:
+      hot bucket is a skewed JOIN key that AQE can split;
+    * a pair is kept only in its FIRST band with ≤ 1 differing bit, so
+      each pair is emitted exactly once with no ``.distinct()``."""
+    if max_hamming > 7:
         raise ValueError(
-            f"max_hamming={max_hamming} needs > {max_hamming} bands for "
-            f"the pigeonhole completeness guarantee (got {bands})")
-    if 64 % bands:
-        raise ValueError("bands must divide 64")
+            f"max_hamming={max_hamming} exceeds 7, the pigeonhole "
+            f"completeness guarantee of the 4 x 16-bit multiprobe")
     hashed = (image_hashes(df, col, kind, "h")
               .filter(F.col("h").isNotNull())
               .select(id_col, "h")
               .localCheckpoint(eager=False))
-    if max_hamming <= 7:
-        return _neardup_multiprobe(hashed, id_col, max_hamming)
-    return _neardup_singleprobe(hashed, id_col, max_hamming, bands)
-
-
-def _neardup_singleprobe(hashed: DataFrame, id_col: str,
-                         max_hamming: int, bands: int) -> DataFrame:
-    """bands × (64/bands)-bit exact-band buckets; candidate volume per
-    band grows as n²/2^width, so this is the fallback for wide radii
-    where the 4×16 multiprobe's pigeonhole (≤ 7) does not apply."""
-    width = 64 // bands
-    mask = (1 << width) - 1
-    band_arr = F.array(*[
-        F.shiftrightunsigned(F.col("h"), b * width).bitwiseAND(F.lit(mask))
-        for b in range(bands)
-    ])
-    allb = hashed.select(id_col, "h",
-                         F.posexplode(band_arr).alias("band", "val"))
-    left = allb.select(F.col(id_col).alias("id_a"),
-                       F.col("h").alias("ha"), "band", "val")
-    right = allb.select(F.col(id_col).alias("id_b"),
-                        F.col("h").alias("hb"), "band", "val")
-    xor = F.col("ha").bitwiseXOR(F.col("hb"))
-    first_band = F.lit(None).cast("int")
-    for b in range(bands - 1, -1, -1):
-        band_clean = (F.shiftrightunsigned(xor, b * width)
-                      .bitwiseAND(F.lit(mask)) == 0)
-        first_band = F.when(band_clean, F.lit(b)).otherwise(first_band)
-    # conjunct order matters: the single-instruction popcount rejects
-    # ~all random band collisions before the first-band CASE chain
-    return (left.join(right, ["band", "val"])
-            .filter((F.col("id_a") < F.col("id_b"))
-                    & (F.bit_count(xor) <= max_hamming)
-                    & (F.col("band") == first_band))
-            .select("id_a", "id_b", F.bit_count(xor).alias("hamming")))
+    return _neardup_multiprobe(hashed, id_col, max_hamming)
 
 
 _MP_BANDS, _MP_WIDTH = 4, 16
@@ -604,7 +557,7 @@ _MP_BANDS, _MP_WIDTH = 4, 16
 
 def _neardup_multiprobe(hashed: DataFrame, id_col: str,
                         max_hamming: int) -> DataFrame:
-    """4 × 16-bit bands with 1-bit probes (r8): hamming ≤ 7 over 4 bands
+    """4 × 16-bit bands with 1-bit probes: hamming ≤ 7 over 4 bands
     means SOME band carries ≤ 1 error (if every band had ≥ 2, the total
     would be ≥ 8), and a 1-bit error is bridged by one side probing each
     single-bit flip of its band value.  Candidate volume per band falls

@@ -891,6 +891,15 @@ SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey LIMIT 3 OFFSET 5
 #    rounded to 4 decimals (JVM vs DuckDB libm may differ in the last ulp)
 # ---------------------------------------------------------------------------
 
+def _round4(c):
+    """``round(c, 4)`` with DuckDB's sign of zero: Spark rounds through
+    ``BigDecimal``, which turns a tiny negative value (Mercator y at the
+    equator is ~-1e-9) into +0.0 where DuckDB's float round gives -0.0;
+    a zero result takes the sign of the unrounded value instead."""
+    r = F.round(c, 4)
+    return F.when(r == 0, c * 0.0).otherwise(r)
+
+
 def q_webmercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoio_jl_spark.functions.crs import lonlat_to_webmercator_cols
     pts = _docs_points(spark, sf_dir).select(
@@ -900,7 +909,7 @@ def q_webmercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     x, y = lonlat_to_webmercator_cols(F.col("lon"), F.col("lat"))
     return pts.select(
-        "doc_id", F.round(x, 4).alias("merc_x"), F.round(y, 4).alias("merc_y"))
+        "doc_id", _round4(x).alias("merc_x"), _round4(y).alias("merc_y"))
 
 
 SQL_WEBMERCATOR = f"""
@@ -932,8 +941,8 @@ def q_mercator3395(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.lit(6378137.0) * (
         F.log(F.tan(F.lit(0.7853981633974483) + F.radians(lat_c) / 2))
         + F.lit(_E_WGS84 / 2.0) * F.log((F.lit(1.0) - es) / (F.lit(1.0) + es)))
-    return pts.select("doc_id", F.round(x, 4).alias("merc_x"),
-                      F.round(y, 4).alias("merc_y"))
+    return pts.select("doc_id", _round4(x).alias("merc_x"),
+                      _round4(y).alias("merc_y"))
 
 
 SQL_MERCATOR3395 = f"""
@@ -1592,7 +1601,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                      synthetic_cluster_pngs)
     docs = _read(spark, sf_dir, "documents").select("doc_id")
     imgs = synthetic_cluster_pngs(docs)
-    return image_neardup_pairs(imgs, max_hamming=7, bands=8)
+    return image_neardup_pairs(imgs, max_hamming=7)
 
 
 _SQL_IMAGE_NEARDUP = """

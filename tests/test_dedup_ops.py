@@ -92,6 +92,58 @@ def test_ngram_jaccard_df_cap_bounds_hot_shingles(spark):
     assert (n, n + 1) in {(r["id_a"], r["id_b"]) for r in rows_c}
 
 
+def _ngram_pair_set(docs, parts, id_map=None):
+    """ngram_jaccard_pairs over ``docs`` cut into ``parts`` partitions,
+    as a set of (id_a, id_b, inter, uni), ids mapped through ``id_map``."""
+    m = id_map.__getitem__ if id_map else int
+    return {(m(r["id_a"]), m(r["id_b"]), r["inter"], r["uni"])
+            for r in DD.ngram_jaccard_pairs(docs.repartition(parts)).collect()}
+
+
+@pytest.mark.parametrize("parts", [1, 3, 8])
+def test_ngram_jaccard_edge_ids_and_partition_counts(spark, parts):
+    """One small corpus with planted near-dups, run with ids 1..n and
+    with ids at the int32 boundary (2^31-1, 2^31, 2^31+1) and near 2^62
+    (order-preserving, so id_a < id_b survives the mapping), at 1, 3
+    and 8 partitions: every run gives the same (id_a, id_b, inter, uni)
+    set once the ids are mapped back."""
+    texts = [doc_text(i) for i in range(8)]
+    texts.append(doc_text(2))                     # exact copy of id 3
+    for k in (4, 5):                              # ids 5, 6: one token changed
+        toks = doc_text(k).split(" ")
+        toks[len(toks) // 2] = "zzz"
+        texts.append(" ".join(toks))
+    small = list(range(1, len(texts) + 1))
+    big = [2**31 - 1, 2**31, 2**31 + 1] + [2**62 - 4 + j
+                                          for j in range(len(texts) - 3)]
+    schema = "doc_id bigint, text string"
+    want = _ngram_pair_set(
+        spark.createDataFrame(list(zip(small, texts)), schema), 1)
+    by_pair = {r[:2]: r[2:] for r in want}
+    inter, uni = by_pair[(3, 9)]
+    assert inter == uni                           # exact copy: Jaccard 1
+    assert (5, 10) in by_pair and (6, 11) in by_pair
+    assert _ngram_pair_set(
+        spark.createDataFrame(list(zip(small, texts)), schema), parts) == want
+    assert _ngram_pair_set(
+        spark.createDataFrame(list(zip(big, texts)), schema), parts,
+        dict(zip(big, small))) == want
+
+
+def test_ngram_jaccard_launches_no_job_before_an_action(spark, corpus):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("ngram-plan-build", "ngram_jaccard_pairs plan build")
+    try:
+        pairs = DD.ngram_jaccard_pairs(corpus)
+        assert tracker.getJobIdsForGroup("ngram-plan-build") == []
+        pairs.count()  # the tracker does see this group's jobs
+        assert tracker.getJobIdsForGroup("ngram-plan-build") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_minhash_star_edges_linear_output(spark, corpus):
     """Star edges: a bucket of n duplicates yields n-1 edges, not
     n(n-1)/2 pairs; components match the pair graph."""
@@ -174,23 +226,18 @@ def test_dedup_plans_single_upstream(spark, sf_dir):
     scans for minhash_lsh_pairs, 8 for ngram_jaccard_pairs — zero
     ReusedExchange, with or without AQE broadcast conversion).  The
     bucket-list rework must keep the upstream single-pass: exactly one
-    FileScan for minhash; at most one for ngram (its final plan reads
-    the localCheckpoint'd pair-count RDD, so the scan count there is
-    0 in the last job).  The registry ``minhash_lsh`` query is held to
-    the same single scan."""
+    FileScan for minhash and for ngram (one linear window chain, no
+    branch).  The registry ``minhash_lsh`` query is held to the same
+    single scan."""
     from geoio_jl_spark import queries as Q
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    for mh in (DD.minhash_lsh_pairs(docs),
-               Q.registry()["minhash_lsh"][0](spark, sf_dir)):
-        mh.count()
-        plan = mh._jdf.queryExecution().executedPlan().toString()
+    for df in (DD.minhash_lsh_pairs(docs),
+               Q.registry()["minhash_lsh"][0](spark, sf_dir),
+               DD.ngram_jaccard_pairs(docs)):
+        df.count()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan parquet") == 1, plan
-
-    ng = DD.ngram_jaccard_pairs(docs)
-    ng.count()
-    plan = ng._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") <= 1, plan
 
 
 def test_remove_dup_chunks_hand_case(spark):

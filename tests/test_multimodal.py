@@ -181,7 +181,7 @@ def test_image_neardup_planted(spark):
     rows = [(1, encode_png(base)), (2, encode_png(near)),
             (3, encode_png(other)), (4, None)]
     df = spark.createDataFrame(rows, "doc_id bigint, image binary")
-    got = M.image_neardup_pairs(df, max_hamming=7, bands=8).collect()
+    got = M.image_neardup_pairs(df, max_hamming=7).collect()
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in got}
     assert (1, 2) in pairs and pairs[(1, 2)] <= 2
     assert all(k == (1, 2) for k in pairs)
@@ -189,9 +189,7 @@ def test_image_neardup_planted(spark):
 
 def test_image_neardup_guards():
     with pytest.raises(ValueError, match="pigeonhole"):
-        M.image_neardup_pairs(None, max_hamming=8, bands=8)
-    with pytest.raises(ValueError, match="divide"):
-        M.image_neardup_pairs(None, max_hamming=2, bands=7)
+        M.image_neardup_pairs(None, max_hamming=8)
 
 
 def test_real_gif_through_pipeline(spark):
@@ -327,15 +325,13 @@ def test_gif_probe_matches_decode():
     assert len(gif.decode_frames(buf)) == 5
 
 
-def test_neardup_multiprobe_equals_singleprobe(spark):
-    """r8: the 4x16 multiprobe candidate scheme must produce EXACTLY the
-    pairs of the exact-band single-probe scheme (both are complete for
-    hamming <= 7 by pigeonhole; this differentially pins the probe
-    bridging and the exactly-once emission predicates) on random hashes
-    with planted near-duplicate clusters."""
-    import numpy as np
-    from geoio_jl_spark.operators.multimodal import (_neardup_multiprobe,
-                                                     _neardup_singleprobe)
+def test_neardup_multiprobe_matches_brute_force(spark):
+    """The 4x16 multiprobe must return EXACTLY the pairs within Hamming
+    7 of a pure-Python popcount over all pairs (pins the probe bridging
+    and the exactly-once emission predicates) on random hashes with
+    planted near-duplicates at Hamming 1, 3, 7 and 9."""
+    from itertools import combinations
+    from geoio_jl_spark.operators.multimodal import _neardup_multiprobe
     rng = np.random.default_rng(11)
     base = rng.integers(-2**63, 2**63 - 1, 120, dtype=np.int64)
     rows = []
@@ -351,9 +347,10 @@ def test_neardup_multiprobe_equals_singleprobe(spark):
                 flip -= 2**64
             rows.append((vid, flip)); vid += 1
     hashed = spark.createDataFrame(rows, "doc_id bigint, h bigint")
-    mp = {(r["id_a"], r["id_b"], r["hamming"])
-          for r in _neardup_multiprobe(hashed, "doc_id", 7).collect()}
-    sp = {(r["id_a"], r["id_b"], r["hamming"])
-          for r in _neardup_singleprobe(hashed, "doc_id", 7, 8).collect()}
-    assert mp == sp
-    assert len(mp) > 100  # the planted clusters actually produced pairs
+    mp = [(r["id_a"], r["id_b"], r["hamming"])
+          for r in _neardup_multiprobe(hashed, "doc_id", 7).collect()]
+    brute = {(a, b, d) for (a, ha), (b, hb) in combinations(rows, 2)
+             if (d := ((ha ^ hb) & (2**64 - 1)).bit_count()) <= 7}
+    assert len(mp) == len(set(mp))  # each pair emitted once
+    assert set(mp) == brute
+    assert len(brute) > 100  # the planted clusters actually produced pairs
