@@ -1,30 +1,32 @@
 """Gap-based sessionization, skew-safe (SURVEY.md §2.8 engine addition).
 
 A session window partitioned by the bare user key serializes one hot key
-(a bot with 10⁷ events) into a single task.  This module ports the as-of
-join's time-bucket carry-in machinery (operators/asof.py:83-141) to
-sessionization:
+(a bot with 10⁷ events) into a single task.  The as-of join's
+``hot_key_buckets`` (operators/asof.py) splits every user with more than
+``hot_threshold`` events into time-range buckets (0 for everyone else),
+and one plan serves all users:
 
-- users whose event count exceeds ``hot_threshold`` get their timeline
-  split into ``n_buckets`` time-range buckets;
-- the within-bucket window runs partitioned by (user, bucket) — bounded
-  task size;
-- a tiny per-bucket summary window (≤ n_buckets rows per hot user)
-  carries the previous bucket's last-event timestamp across the boundary
-  (so the first event of a bucket knows whether it continues a session)
-  and a cumulative new-session count renumbers local session ids into
-  the exact global numbering the single-window form produces.
+- a window partitioned by (user, bucket) numbers sessions locally — each
+  bucket's first event starts a local session — bounded task size;
+- one (``_first``, ``_last``, ``_n``) summary per hot bucket (≤ n_buckets
+  rows per hot user) decides whether the bucket's first event really
+  starts a session (``fn``: more than one gap after the earlier buckets'
+  last event, or no earlier bucket) and the offset that renumbers the
+  local ids into the exact global numbering, joined back by broadcast
+  as a fix-up: ``sess_id = _local + coalesce(_off, 0)``.
 
-The cold path and the hot path produce IDENTICAL (user, sess_id) labels:
-sess_id is the running count of session starts in (ts, tiebreak) order,
-so the driver oracle (a plain SQL window) checks the skew path whenever
-any user crosses the threshold.
+Every user gets the same (user, sess_id) labels as the single-window
+form: sess_id is the running count of session starts in (ts, tiebreak)
+order, so the driver oracle (a plain SQL window) checks the bucketed
+plan whenever any user crosses the threshold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from geoio_jl_spark.operators.asof import hot_key_buckets
 
 
 def _flag(prev_ts: Column, ts: Column, gap_us: int) -> Column:
@@ -39,87 +41,36 @@ def sessionize_events(ev: DataFrame, gap_us: int,
                       n_buckets: int = 32) -> DataFrame:
     """Per-event session labels: input columns + ``sess_id`` (1-based
     running count of session starts per user, ordered by
-    (ts, tiebreak)).  ``hot_threshold=None`` disables skew detection
-    (single window per user)."""
+    (ts, tiebreak)).  ``hot_threshold=None`` keeps every user in one
+    bucket."""
     cols = ev.columns
-    order = [F.col(ts_col).asc(), F.col(tiebreak_col).asc()]
-
-    def _plain(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(user_col).orderBy(*order)
-        new_sess = _flag(F.lag(ts_col).over(w), F.col(ts_col), gap_us)
-        return df.withColumn(
-            "sess_id",
-            F.sum(new_sess).over(
-                w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("bigint"))
-
-    if hot_threshold is None:
-        return _plain(ev)
-
-    # -- skew detection: per-user counts + time span (tiny agg) --
-    stats = (ev.groupBy(user_col)
-             .agg(F.count("*").alias("_n"),
-                  F.min(ts_col).alias("_tmin"),
-                  F.max(ts_col).alias("_tmax"))
-             .filter(F.col("_n") > hot_threshold)
-             .select(user_col, "_n", "_tmin", "_tmax"))
-    tagged = ev.join(F.broadcast(stats), user_col, "left")
-
-    cold = _plain(tagged.filter(F.col("_tmin").isNull())).select(
-        *cols, "sess_id")
-
-    hot = tagged.filter(F.col("_tmin").isNotNull())
-    # per-user ADAPTIVE bucket count (r8): ceil(_n / hot_threshold)
-    # buckets capped at n_buckets — a user just over the threshold gets
-    # 2 buckets instead of always n_buckets, so the per-bucket summary
-    # tables (carry/base) and the window-group count scale with the
-    # user's actual size instead of ×n_buckets for everyone; a 10⁷-event
-    # bot still caps at n_buckets.  Bucket boundaries never change the
-    # emitted sess_id (the renumbering is bucket-agnostic — tested).
-    nb = F.least(F.lit(n_buckets),
-                 F.ceil(F.col("_n") / F.lit(max(hot_threshold, 1)))
-                 .cast("int"))
-    # monotonic time-range bucket (double math only picks the split
-    # point; ordering inside a bucket still uses the exact ts column)
-    span = (F.col("_tmax") - F.col("_tmin")).cast("double") + F.lit(1.0)
-    frac = (F.col(ts_col) - F.col("_tmin")).cast("double") / span
-    hot = hot.withColumn(
-        "_bkt",
-        F.least(F.floor(frac * nb).cast("int"), nb - F.lit(1)))
-
-    # previous bucket's last-event ts (ts is monotone across buckets, so
-    # max over strictly-earlier buckets == last); ≤ n_buckets rows/user
-    bsum = hot.groupBy(user_col, "_bkt").agg(
-        F.max(ts_col).alias("_last_ts"))
+    b = hot_key_buckets(ev, user_col, ts_col, hot_threshold, n_buckets)
+    wkb = (Window.partitionBy(user_col, "_bkt")
+           .orderBy(F.col(ts_col).asc(), F.col(tiebreak_col).asc()))
+    local = b.withColumn(
+        "_local",
+        F.sum(_flag(F.lag(ts_col).over(wkb), F.col(ts_col), gap_us))
+        .over(wkb.rowsBetween(Window.unboundedPreceding, 0)))
+    # _off(b) = Σ_{b' < b} (_n − 1 + fn) − 1 + fn: a bucket adds its local
+    # sessions, minus its first one unless that first event starts one
     wb = (Window.partitionBy(user_col).orderBy(F.col("_bkt").asc())
           .rowsBetween(Window.unboundedPreceding, -1))
-    carry = bsum.withColumn("_carry_ts",
-                            F.max("_last_ts").over(wb)).select(
-        user_col, "_bkt", "_carry_ts")
-
-    # within-bucket window: bounded task size by construction
-    wkb = Window.partitionBy(user_col, "_bkt").orderBy(*order)
-    prev = F.coalesce(F.lag(ts_col).over(wkb), F.col("_carry_ts"))
-    flagged = (hot.join(F.broadcast(carry), [user_col, "_bkt"])
-               .withColumn("_new", _flag(prev, F.col(ts_col), gap_us))
-               .withColumn(
-                   "_sess_local",
-                   F.sum("_new").over(
-                       wkb.rowsBetween(Window.unboundedPreceding, 0))))
-
-    # renumber: base(b) = Σ new-session count over buckets < b; the
-    # per-bucket count is the cumulative flag at the bucket's last row
-    nnew = flagged.groupBy(user_col, "_bkt").agg(
-        F.max("_sess_local").alias("_n_new"))
-    base = nnew.withColumn(
-        "_base", F.coalesce(F.sum("_n_new").over(wb), F.lit(0))).select(
-        user_col, "_bkt", "_base")
-    hot_done = (flagged.join(F.broadcast(base), [user_col, "_bkt"])
-                .withColumn(
-                    "sess_id",
-                    (F.col("_base") + F.col("_sess_local")).cast("bigint"))
-                .select(*cols, "sess_id"))
-    return cold.unionByName(hot_done)
+    fix = (local.filter(F.col("_hot"))
+           .groupBy(user_col, "_bkt")
+           .agg(F.min(ts_col).alias("_first"), F.max(ts_col).alias("_last"),
+                F.max("_local").alias("_n"))
+           .withColumn("_fn", _flag(F.max("_last").over(wb),
+                                    F.col("_first"), gap_us))
+           .withColumn("_off",
+                       F.coalesce(F.sum(F.col("_n") - 1 + F.col("_fn"))
+                                  .over(wb), F.lit(0))
+                       - 1 + F.col("_fn"))
+           .select(user_col, "_bkt", "_off"))
+    return (local.join(F.broadcast(fix), [user_col, "_bkt"], "left")
+            .withColumn("sess_id",
+                        (F.col("_local") + F.coalesce("_off", F.lit(0)))
+                        .cast("bigint"))
+            .select(*cols, "sess_id"))
 
 
 def session_rollup(ev: DataFrame, gap_us: int,
@@ -128,8 +79,8 @@ def session_rollup(ev: DataFrame, gap_us: int,
                    hot_threshold: int | None = 1_000_000,
                    n_buckets: int = 32) -> DataFrame:
     """(user, sess_id, n_events, start_us, end_us) — sessions can span
-    buckets; the final group-by stitches them because hot-path sess_ids
-    are already globally renumbered."""
+    buckets; the final group-by stitches them because sess_ids are
+    already globally renumbered."""
     sess = sessionize_events(ev, gap_us, user_col, ts_col, tiebreak_col,
                              hot_threshold, n_buckets)
     return (sess.groupBy(user_col, "sess_id")

@@ -1255,9 +1255,9 @@ FROM embeddings e LEFT JOIN comp c ON c.node = e.vec_id
 # Q: batch sessionization (gap-based session windows) — the batch twin
 # of streaming/pipeline.sessionize (applyInPandasWithState), routed
 # through the skew-safe operator (operators/sessionize.py: hot users
-# split into time buckets, carry-in across boundaries, renumbered).
-# hot_threshold=50 puts real sf users on the HOT path, so the plain-SQL
-# oracle verifies the bucket-stitching machinery end-to-end.
+# split into time buckets, renumbered by a per-bucket fix-up join).
+# hot_threshold=50 puts real sf users into buckets, so the plain-SQL
+# oracle verifies the bucket renumbering end-to-end.
 # ---------------------------------------------------------------------------
 
 _SESSION_GAP_US = 1800 * 1_000_000  # 30 min

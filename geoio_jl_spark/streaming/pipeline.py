@@ -72,6 +72,53 @@ def stream_url_dedup(stream: DataFrame, ts: str = "ts",
             .dropDuplicatesWithinWatermark(["canon_url"]))
 
 
+def _gap_sessions(grouped, key_cols: list[str], gap_seconds: int,
+                  ts_col: str, use_timeout: bool) -> DataFrame:
+    """The gap-session state machine, run by ``applyInPandasWithState``
+    over ``grouped``: state is the open session (start_us, end_us, n);
+    emits one ``(*key_cols, session_start_us, session_end_us, n_events)``
+    row per closed session."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    cols = [*key_cols, "session_start_us", "session_end_us", "n_events"]
+
+    def fn(key, pdf_iter, state):
+        closed = []
+        if state.hasTimedOut:
+            if state.exists:
+                closed.append((*key, *state.get))
+                state.remove()
+            yield pd.DataFrame(closed, columns=cols)
+            return
+        cur = state.get if state.exists else None
+        events = []
+        for pdf in pdf_iter:
+            events.extend(int(t.value // 1000)
+                          for t in pd.to_datetime(pdf[ts_col]))
+        events.sort()
+        for us in events:
+            if cur is None:
+                cur = (us, us, 1)
+            elif us - cur[1] > gap_seconds * 1_000_000:
+                closed.append((*key, *cur))
+                cur = (us, us, 1)
+            else:
+                cur = (cur[0], us, cur[2] + 1)
+        if cur is not None:
+            state.update(cur)
+            if use_timeout:
+                state.setTimeoutDuration(gap_seconds * 1000)
+        yield pd.DataFrame(closed, columns=cols)
+
+    return grouped.applyInPandasWithState(
+        fn, outputStructType=", ".join(f"{c} long" for c in cols),
+        stateStructType="start_us long, end_us long, n long",
+        outputMode="append",
+        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if use_timeout
+                     else GroupStateTimeout.NoTimeout))
+
+
 def sessionize(stream: DataFrame, gap_seconds: int = 1800,
                user_col: str = "user_id", ts_col: str = "ts",
                use_timeout: bool = True) -> DataFrame:
@@ -84,54 +131,8 @@ def sessionize(stream: DataFrame, gap_seconds: int = 1800,
     more than ``gap_seconds`` after the last one; the state timeout closes
     trailing sessions.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = ("user_id long, session_start_us long, session_end_us long, "
-                  "n_events long")
-    state_schema = "start_us long, end_us long, n long"
-
-    def fn(key, pdf_iter, state: GroupState):
-        user = key[0]
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                s, e, n = state.get
-                closed.append((user, s, e, n))
-                state.remove()
-            yield pd.DataFrame(
-                closed, columns=["user_id", "session_start_us",
-                                 "session_end_us", "n_events"])
-            return
-        cur = state.get if state.exists else None
-        events = []
-        for pdf in pdf_iter:
-            events.extend((int(t.value // 1000),) for t in pd.to_datetime(pdf[ts_col]))
-        events.sort()
-        for (us,) in events:
-            us = us  # microseconds
-            if cur is None:
-                cur = (us, us, 1)
-            elif us - cur[1] > gap_seconds * 1_000_000:
-                closed.append((user, *cur))
-                cur = (us, us, 1)
-            else:
-                cur = (cur[0], us, cur[2] + 1)
-        if cur is not None:
-            state.update(cur)
-            if use_timeout:
-                state.setTimeoutDuration(gap_seconds * 1000)
-        yield pd.DataFrame(
-            closed, columns=["user_id", "session_start_us",
-                             "session_end_us", "n_events"])
-
-    return (
-        stream.groupBy(user_col).applyInPandasWithState(
-            fn, outputStructType=out_schema, stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if use_timeout
-                         else GroupStateTimeout.NoTimeout))
-    )
+    return _gap_sessions(stream.groupBy(user_col), ["user_id"],
+                         gap_seconds, ts_col, use_timeout)
 
 
 def sessionize_sharded(stream: DataFrame, gap_seconds: int = 1800,
@@ -163,9 +164,6 @@ def sessionize_sharded(stream: DataFrame, gap_seconds: int = 1800,
     ``use_timeout=False`` only for single-batch replay tests where no
     later batch exists to fire the timeout).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     if shard_seconds is None:
         shard_seconds = 2 * gap_seconds
     if shard_seconds < gap_seconds:
@@ -173,53 +171,13 @@ def sessionize_sharded(stream: DataFrame, gap_seconds: int = 1800,
                          "shards imply a session break")
     shard_us = shard_seconds * 1_000_000
 
-    out_schema = ("user_id long, shard long, session_start_us long, "
-                  "session_end_us long, n_events long")
-    state_schema = "start_us long, end_us long, n long"
-
-    def fn(key, pdf_iter, state: GroupState):
-        user, shard = key[0], key[1]
-        cols = ["user_id", "shard", "session_start_us",
-                "session_end_us", "n_events"]
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                s, e, n = state.get
-                closed.append((user, shard, s, e, n))
-                state.remove()
-            yield pd.DataFrame(closed, columns=cols)
-            return
-        cur = state.get if state.exists else None
-        events = []
-        for pdf in pdf_iter:
-            events.extend(
-                (int(t.value // 1000),) for t in pd.to_datetime(pdf[ts_col]))
-        events.sort()
-        for (us,) in events:
-            if cur is None:
-                cur = (us, us, 1)
-            elif us - cur[1] > gap_seconds * 1_000_000:
-                closed.append((user, shard, *cur))
-                cur = (us, us, 1)
-            else:
-                cur = (cur[0], us, cur[2] + 1)
-        if cur is not None:
-            state.update(cur)
-            if use_timeout:
-                state.setTimeoutDuration(gap_seconds * 1000)
-        yield pd.DataFrame(closed, columns=cols)
-
     sharded = stream.withColumn(
         "_shard",
         F.floor(F.unix_micros(F.col(ts_col).cast("timestamp"))
                 / F.lit(shard_us)))
-    return (
-        sharded.groupBy(user_col, "_shard").applyInPandasWithState(
-            fn, outputStructType=out_schema, stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                         if use_timeout else GroupStateTimeout.NoTimeout))
-    )
+    return _gap_sessions(sharded.groupBy(user_col, "_shard"),
+                         ["user_id", "shard"], gap_seconds, ts_col,
+                         use_timeout)
 
 
 def stitch_partial_sessions(partials: DataFrame, gap_seconds: int = 1800,

@@ -1,6 +1,8 @@
 """As-of join semantics: backward inclusive, per-key, inner/left modes."""
 
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from geoio_jl_spark.operators.asof import asof_join
 
@@ -37,11 +39,22 @@ def test_left_mode_keeps_unmatched(spark):
     assert len(out) == 4
 
 
-def test_hot_key_bucketed_path_equals_plain(spark):
+# the same long offsets as numbers, as microsecond timestamps and as days
+TS_TYPES = {
+    "long": lambda c: c,
+    "timestamp": F.timestamp_micros,
+    "date": lambda c: F.date_add(F.lit("1970-01-01").cast("date"),
+                                 c.cast("int")),
+}
+
+
+@pytest.mark.parametrize("ts_type", list(TS_TYPES))
+def test_hot_key_bucketed_path_equals_plain(spark, ts_type):
     """Planted hot user (one key dominating the table): forcing the
     time-bucketed skew path must reproduce the single-window result
     exactly — including carry-ins across empty buckets and inclusive
-    equal-ts matches at bucket boundaries."""
+    equal-ts matches at bucket boundaries — for every ts column type
+    the bucketing maps to numbers."""
     import numpy as np
     rng = np.random.default_rng(3)
     n_hot = 4000
@@ -63,7 +76,10 @@ def test_hot_key_bucketed_path_equals_plain(spark):
     # unique ts per key on the right (matches events-table property;
     # equal-ts right rows are order-ambiguous in ANY asof engine)
     right = right.drop_duplicates(subset=["k", "t"])
-    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
+    ldf, rdf = (spark.createDataFrame(d).withColumn(
+        "t", TS_TYPES[ts_type](F.col("t"))) for d in (left, right))
+    assert dict(ldf.dtypes)["t"] == ("bigint" if ts_type == "long"
+                                     else ts_type)
     for how in ("inner", "left"):
         plain = asof_join(ldf, rdf, on="k", ts="t", how=how,
                           hot_threshold=None)

@@ -23,6 +23,9 @@ FAST = [
     "knn_join_partial", "knn_join_pruned",
     # the near-dup operators (parity ~3.5 s, ~14 s with warm-up, ~7.5 s)
     "ngram_jaccard", "ngram_jaccard_capped", "image_neardup",
+    # the two time-bucketed operators (session_rollup runs real users hot;
+    # the asof carry-in is checked by the hot-path test below)
+    "asof_join", "session_rollup",
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -100,3 +103,38 @@ def test_mercator_equator_keeps_sign_of_zero(spark, tmp_path, name):
     want = [tuple(map(repr, r)) for r in con.sql(sql).fetchall()]
     assert want[0][2] == "-0.0"  # the case this test pins is present
     assert got == want
+
+
+def test_asof_join_hot_path_matches_oracle(spark, sf_dir, duck):
+    """The registry ``asof_join`` runs at the default threshold, where no
+    sf user is hot.  At ``hot_threshold=20`` real users (up to 32 click +
+    purchase rows at sf0.001) are split into time buckets, so the same
+    DuckDB ASOF oracle checks the carry-in across bucket boundaries."""
+    from pyspark.sql import functions as F
+
+    from geoio_jl_spark.operators.asof import asof_join, hot_key_buckets
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", F.floor(F.col("value") * 1000000).cast("bigint")
+        .alias("purchase_value_e6"))
+    both = clicks.select("user_id", "ts").unionByName(
+        purchases.select("user_id", "ts"))
+    assert hot_key_buckets(both, "user_id", "ts", 20, 32).filter(
+        F.col("_bkt") > 0).limit(1).count() == 1  # the carry-in runs
+    sdf = asof_join(clicks, purchases, on="user_id", ts="ts",
+                    right_cols=["purchase_value_e6"], hot_threshold=20
+                    ).select(
+        "event_id", "user_id",
+        F.col("asof_purchase_value_e6").alias("purchase_value_e6"),
+        F.unix_micros(F.col("asof_ts").cast("timestamp"))
+        .alias("purchase_ts_us"))
+    scols = [c.lower() for c in sdf.columns]
+    srows = [tuple(r) for r in sdf.collect()]
+    rel = duck.sql(Q.SQL_ASOF_JOIN)
+    dcols = [c.lower() for c in rel.columns]
+    drows = rel.fetchall()
+    assert sorted(scols) == sorted(dcols)
+    assert len(srows) == len(drows)
+    assert _multiset(scols, srows) == _multiset(dcols, drows)

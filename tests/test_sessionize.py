@@ -141,12 +141,16 @@ def test_skew_path_labels_match_plain(spark, sf_dir):
 
 def test_planted_hot_user_bounded_tasks(spark):
     """A planted 10⁶-event bot user: (1) rollup identical to the plain
-    window, (2) the bot's events split across all buckets — no single
-    (user, bucket) task sees more than ~2/n_buckets of the timeline,
-    (3) sessions genuinely span bucket boundaries (carry-in exercised)."""
+    window, (2) the operator's own buckets split the bot's events over
+    the adaptive bucket count — no single (user, bucket) task sees more
+    than ~2/nb of the timeline, (3) sessions genuinely span bucket
+    boundaries (carry-in exercised)."""
+    import math
+
+    from geoio_jl_spark.operators.asof import hot_key_buckets
     from geoio_jl_spark.operators.sessionize import (session_rollup,
                                                      sessionize_events)
-    n_hot, n_buckets = 1_000_000, 32
+    n_hot, n_buckets, threshold = 1_000_000, 32, 100_000
     # bot: 1e6 events, mostly 1s apart with a >gap break every 97k
     # events; plus 20 cold users with sparse timelines
     bot = spark.range(n_hot).select(
@@ -158,54 +162,68 @@ def test_planted_hot_user_bounded_tasks(spark):
         (F.col("id") % 20).alias("user_id"), F.col("id").alias("event_id"),
         (F.col("id") * 37 * GAP_US % (4 * 10 ** 12)).alias("ts_us"))
     ev = bot.unionByName(cold)
-    got = session_rollup(ev, GAP_US, hot_threshold=100_000,
+    got = session_rollup(ev, GAP_US, hot_threshold=threshold,
                          n_buckets=n_buckets)
     ref = session_rollup(ev, GAP_US, hot_threshold=None)
     a = sorted(tuple(r) for r in got.collect())
     b = sorted(tuple(r) for r in ref.collect())
     assert a == b
-    # bucket occupancy: recompute the operator's bucket formula and
-    # assert the hot timeline is spread over all buckets
-    span = ev.filter("user_id = 9999").agg(
-        F.min("ts_us"), F.max("ts_us")).first()
-    tmin, tmax = span
-    occ = (ev.filter("user_id = 9999")
-           .withColumn("bkt", F.least(
-               F.floor((F.col("ts_us") - tmin)
-                       / float(tmax - tmin + 1) * n_buckets).cast("int"),
-               F.lit(n_buckets - 1)))
-           .groupBy("bkt").count().collect())
-    assert len(occ) == n_buckets
-    assert max(r["count"] for r in occ) <= 2 * n_hot // n_buckets
-    # carry-in exercised: with breaks every 97k events and ~31k-event
+    # bucket occupancy of the operator's own bucketing: the bot gets
+    # the adaptive count and its timeline is spread evenly over it
+    nb = min(n_buckets, math.ceil(n_hot / threshold))
+    occ = (hot_key_buckets(ev, "user_id", "ts_us", threshold, n_buckets)
+           .filter("user_id = 9999").groupBy("_bkt").count().collect())
+    assert len(occ) == nb == 10
+    assert max(r["count"] for r in occ) <= 2 * n_hot // nb
+    # carry-in exercised: with breaks every 97k events and ~100k-event
     # buckets, most buckets CONTINUE the previous bucket's session
     labels = sessionize_events(ev.filter("user_id = 9999"), GAP_US,
-                               hot_threshold=100_000, n_buckets=n_buckets)
+                               hot_threshold=threshold, n_buckets=n_buckets)
     n_sessions = labels.agg(F.countDistinct("sess_id")).first()[0]
     assert n_sessions == 11  # 1e6 / 97k breaks + 1
 
 
 def test_skew_path_edge_cases(spark):
-    """Single-event users, duplicate timestamps (tiebreak ordering), and
-    a one-session user spanning every bucket (all n_new=0 after the
-    first) — exact label parity with the plain window."""
+    """Single-event users, duplicate timestamps (tiebreak ordering), a
+    one-session user spanning every bucket (all n_new=0 after the
+    first), a hot user whose events share one timestamp (span 1: one
+    bucket) and an empty input — exact label parity with the plain
+    window at 1, 3 and 8 shuffle partitions."""
     import pandas as pd
+    from geoio_jl_spark.operators.asof import hot_key_buckets
     from geoio_jl_spark.operators.sessionize import sessionize_events
     rows = []
     rows.append((1, 0, 5 * GAP_US))                     # singleton
     rows += [(2, i, 10 * GAP_US + (i // 3)) for i in range(12)]  # dup ts
     rows += [(3, i, i * (GAP_US // 2)) for i in range(40)]  # one session
     rows += [(4, i, i * 2 * GAP_US) for i in range(15)]  # all new
+    rows += [(5, i, 7 * GAP_US) for i in range(30)]     # one timestamp
     ev = spark.createDataFrame(
         pd.DataFrame(rows, columns=["user_id", "event_id", "ts_us"]))
-    plain = sessionize_events(ev, GAP_US, hot_threshold=None)
-    hot = sessionize_events(ev, GAP_US, hot_threshold=0, n_buckets=8)
     key = ["user_id", "event_id", "ts_us", "sess_id"]
-    assert (sorted(map(tuple, plain.select(*key).collect()))
-            == sorted(map(tuple, hot.select(*key).collect())))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 3, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            plain = sessionize_events(ev, GAP_US, hot_threshold=None)
+            hot = sessionize_events(ev, GAP_US, hot_threshold=0,
+                                    n_buckets=8)
+            assert (sorted(map(tuple, plain.select(*key).collect()))
+                    == sorted(map(tuple, hot.select(*key).collect()))), parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # user 3: one session despite spanning all 8 buckets
     assert hot.filter("user_id = 3").agg(
         F.countDistinct("sess_id")).first()[0] == 1
+    # user 5: hot, but a span of 1 puts every event in bucket 0
+    b5 = hot_key_buckets(ev.filter("user_id = 5"), "user_id", "ts_us", 0, 8)
+    assert {(r["_hot"], r["_bkt"]) for r in b5.collect()} == {(True, 0)}
+    assert {r["sess_id"] for r in hot.filter("user_id = 5").collect()} == {1}
+    # empty input: no rows, same columns
+    empty = sessionize_events(ev.limit(0), GAP_US, hot_threshold=0,
+                              n_buckets=8)
+    assert empty.columns == [*ev.columns, "sess_id"]
+    assert empty.collect() == []
 
 
 # ---------------------------------------------------------------------------
