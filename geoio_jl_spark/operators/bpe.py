@@ -1,6 +1,5 @@
-"""Distributed BPE tokenizer TRAINING (Sennrich et al. merge learning) —
-the step that produces the merge table which ``bpe_tokens``-style
-tokenizers then apply.
+"""Distributed BPE tokenizer (Sennrich et al.): merge learning over the
+vocabulary table, and corpus encoding with the learned merge table.
 
 No reference counterpart (LLM-pipeline axis of the brief).  Scale shape
 is the one that matters at 100 TB: the corpus is aggregated ONCE into a
@@ -21,30 +20,42 @@ previous match ("a b a b" → "ab a b"), so the replace is applied
 cover symbol chains up to 2^6, far beyond real word lengths.  The DuckDB
 oracle unrolls the identical rounds (same pass count, same
 count-desc/pair-asc tie-break), so learned merges are bit-identical.
+
+Encoding applies a learned table with that same replace chain, once per
+DISTINCT word (``tokenize_vocab``), and joins the per-word token counts
+back to the corpus (``encode_bpe``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _REPLACE_PASSES = 6
 END = "</w>"
+# train_bpe materializes the vocabulary every this many merge rounds
+CHECKPOINT_EVERY = 4
+# tokenize_vocab's expression-depth limit (merges per apply)
+MAX_MERGES = 64
+
+
+def _words(docs: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    """corpus → one row per non-empty space-separated word (+ ``keep``)."""
+    return (docs
+            .select(*keep, F.explode(F.split(F.col(text_col), " "))
+                    .alias("word"))
+            .filter(F.col("word") != ""))
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """corpus → (word, cnt): the one corpus-sized aggregation."""
-    return (docs
-            .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-            .filter(F.col("word") != "")
-            .groupBy("word").agg(F.count("*").alias("cnt")))
+    return _words(docs, text_col).groupBy("word").agg(
+        F.count("*").alias("cnt"))
 
 
-def _initial_symbols(words: DataFrame) -> DataFrame:
-    sym = F.concat(F.array_join(F.split("word", ""), " "),
-                   F.lit(" " + END))
-    return words.select(sym.alias("sym"), "cnt")
+def _chars(word):
+    """word → its space-joined characters plus the end-of-word marker."""
+    return F.concat(F.array_join(F.split(word, ""), " "), F.lit(" " + END))
 
 
 def _apply_merge(sym, a: str, b: str):
@@ -58,17 +69,18 @@ def _apply_merge(sym, a: str, b: str):
 
 
 def train_bpe(docs: DataFrame, n_merges: int,
-              text_col: str = "text",
-              checkpoint_every: int = 4) -> list[tuple[str, int]]:
+              text_col: str = "text") -> list[tuple[str, int]]:
     """Learn ``n_merges`` BPE merges → [(pair, summed count), ...].
 
     The vocabulary is materialized with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds rather than every round: between
+    ``CHECKPOINT_EVERY`` rounds rather than every round: between
     checkpoints a round's aggregation recomputes at most
-    ``checkpoint_every × _REPLACE_PASSES`` literal string replaces over
+    ``CHECKPOINT_EVERY × _REPLACE_PASSES`` literal string replaces over
     the vocab table — far cheaper than an extra materialization per
     round — while lineage depth stays bounded."""
-    vocab = _initial_symbols(word_counts(docs, text_col)).localCheckpoint()
+    vocab = (word_counts(docs, text_col)
+             .select(_chars(F.col("word")).alias("sym"), "cnt")
+             .localCheckpoint())
     merges: list[tuple[str, int]] = []
     for r in range(n_merges):
         parts = F.split("sym", " ")
@@ -93,46 +105,9 @@ def train_bpe(docs: DataFrame, n_merges: int,
         a, b = pair.split(" ")
         vocab = vocab.select(
             _apply_merge(F.col("sym"), a, b).alias("sym"), "cnt")
-        if (r + 1) % checkpoint_every == 0:
+        if (r + 1) % CHECKPOINT_EVERY == 0:
             vocab = vocab.localCheckpoint()
     return merges
-
-
-def apply_bpe(docs: DataFrame, merges: list[tuple[str, int] | str],
-              text_col: str = "text",
-              out_col: str = "bpe_sym") -> DataFrame:
-    """Tokenize with a learned merge list (same replace-pass kernel).
-
-    Merges are applied per WORD inside the array lambda — never across
-    word boundaries (a merged symbol ending in the terminal marker must
-    not pair with the next word's first character).
-
-    The merge list compiles into one Catalyst expression of
-    ``len(merges) × _REPLACE_PASSES`` nested replaces, so this form is
-    for SMALL merge tables (analysis cost and JVM codegen limits are
-    superlinear in expression depth); a production tokenizer with
-    thousands of merges should apply them round-by-round over a
-    materialized column (train_bpe's shape) or in an Arrow kernel —
-    enforced with a named error rather than an opaque codegen failure."""
-    if len(merges) > 64:
-        raise ValueError(
-            f"{len(merges)} merges would compile into a "
-            f"{len(merges) * _REPLACE_PASSES}-deep expression tree; "
-            "apply large merge tables round-by-round over a "
-            "materialized column instead")
-    pairs = [(m[0] if isinstance(m, tuple) else m) for m in merges]
-
-    def word_to_sym(w):
-        col = F.concat(F.array_join(F.split(w, ""), " "),
-                       F.lit(" " + END))
-        for pair in pairs:
-            a, b = pair.split(" ")
-            col = _apply_merge(col, a, b)
-        return col
-
-    return docs.withColumn(
-        out_col,
-        F.transform(F.split(F.col(text_col), " "), word_to_sym))
 
 
 # ---------------------------------------------------------------------------
@@ -145,119 +120,40 @@ def tokenize_vocab(words: DataFrame, merges: list[tuple[str, int] | str],
                    out_col: str = "sym") -> DataFrame:
     """(word, ...) table → + ``sym`` (space-joined BPE symbols).
 
-    Pure-JVM replace kernel (same ``_apply_merge`` chain as training, so
-    the result is bit-identical to the DuckDB oracle's unrolled SQL).
-    Meant for the DISTINCT-word table, never the corpus: the expression
-    tree is ``len(merges) × _REPLACE_PASSES`` deep (same ≤64 guard as
-    apply_bpe)."""
+    Applies the merges with the training's ``_apply_merge`` replace
+    chain, so the result is bit-identical to the DuckDB oracle's
+    unrolled SQL.  Meant for the DISTINCT-word table, never the corpus.
+    The merge list compiles into one Catalyst expression ``len(merges)
+    × _REPLACE_PASSES`` replaces deep, and analysis and codegen cost
+    grow superlinearly in that depth, so tables beyond ``MAX_MERGES``
+    raise a named error instead of an opaque codegen failure."""
     pairs = [(m[0] if isinstance(m, tuple) else m) for m in merges]
-    if len(pairs) > 64:
+    if len(pairs) > MAX_MERGES:
         raise ValueError(
-            f"{len(pairs)} merges exceed the JVM expression-depth guard; "
-            "use tokenize_vocab_kernel for large merge tables")
-    col = F.concat(F.array_join(F.split(F.col(word_col), ""), " "),
-                   F.lit(" " + END))
+            f"{len(pairs)} merges would compile into a "
+            f"{len(pairs) * _REPLACE_PASSES}-deep expression tree; "
+            f"tokenize_vocab applies at most {MAX_MERGES}")
+    col = _chars(F.col(word_col))
     for pair in pairs:
         a, b = pair.split(" ")
         col = _apply_merge(col, a, b)
     return words.withColumn(out_col, col)
 
 
-def _tokenize_word_py(word: str, ordered_pairs: list[tuple[str, str]]
-                      ) -> list[str]:
-    """Apply merges in rank order, passes until fixpoint — emulating the
-    replace-chain kernel EXACTLY, including its boundary-space rule: a
-    ``replace(' a b ', ' ab ')`` match consumes the separator before the
-    following token, so within one pass the token right after a merged
-    pair can never START the next match (e.g. a^7 with merge (a,a)
-    becomes ``aa a aa a a`` in pass one, not ``aa aa aa a``).  Verified
-    bit-equal to tokenize_vocab in tests on adversarial repeated-symbol
-    runs."""
-    syms = list(word) + [END]
-    for a, b in ordered_pairs:
-        while True:
-            out, i, changed = [], 0, False
-            n = len(syms)
-            while i < n:
-                if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                    changed = True
-                    if i < n:        # boundary space consumed: emit the
-                        out.append(syms[i])   # next token unmergeable
-                        i += 1
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-            if not changed:
-                break
-    return syms
-
-
-def tokenize_vocab_kernel(words: DataFrame,
-                          merges: list[tuple[str, int] | str],
-                          word_col: str = "word",
-                          out_col: str = "sym") -> DataFrame:
-    """Arrow-batched tokenizer for LARGE merge tables (thousands of
-    merges — the production path the apply_bpe guard points at).  The
-    merge list ships in the UDF closure (small); a per-batch memo dict
-    collapses repeated words, so cost is O(distinct words per batch).
-    Still intended for the distinct-word table, where each word is
-    tokenized exactly once across the job."""
-    from geoio_jl_spark.shipping import ensure_pyfiles
-    ensure_pyfiles(words.sparkSession)
-    ordered = [tuple((m[0] if isinstance(m, tuple) else m).split(" "))
-               for m in merges]
-
-    @F.pandas_udf("string")
-    def _tok(col: pd.Series) -> pd.Series:
-        memo: dict[str, str] = {}
-
-        def one(w):
-            if w is None:
-                return None
-            got = memo.get(w)
-            if got is None:
-                got = memo[w] = " ".join(_tokenize_word_py(w, ordered))
-            return got
-        return col.map(one)
-
-    return words.withColumn(out_col, _tok(F.col(word_col)))
-
-
 def encode_bpe(docs: DataFrame, merges: list[tuple[str, int] | str],
                text_col: str = "text", id_col: str = "doc_id",
-               out_col: str = "n_bpe_sym",
-               how: str = "jvm",
-               broadcast_vocab: bool = True) -> DataFrame:
+               out_col: str = "n_bpe_sym") -> DataFrame:
     """Per-document BPE token count with a trained merge table —
-    the 100-TB shape: merges are applied to the DISTINCT-word table
-    only (``|vocab| ~ 10^6×`` smaller than the corpus), the per-word
-    token count joins back to the exploded corpus (broadcast by default
-    — pass ``broadcast_vocab=False`` when the vocabulary outgrows the
-    driver; AQE then picks the join), and the per-doc aggregation is the
-    single corpus shuffle (map-side combine applies).
-
-    ``how='jvm'`` uses the replace-chain kernel (bit-identical to the
-    DuckDB oracle); ``how='kernel'`` uses the Arrow tokenizer for merge
-    tables beyond the JVM expression-depth guard."""
-    words = (docs
-             .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-             .filter(F.col("word") != "")
-             .distinct())
-    tok = tokenize_vocab if how == "jvm" else tokenize_vocab_kernel
-    vocab = (tok(words, merges)
+    the 100-TB shape: ``tokenize_vocab`` runs over the DISTINCT-word
+    table only (``|vocab| ~ 10^6×`` smaller than the corpus), the
+    per-word token count broadcast-joins back to the exploded corpus,
+    and the per-doc aggregation is the single corpus shuffle (map-side
+    combine applies)."""
+    words = _words(docs, text_col).distinct()
+    vocab = (tokenize_vocab(words, merges)
              .select("word",
                      F.size(F.split("sym", " ")).cast("bigint")
                      .alias("_ntok")))
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    exploded = (docs
-                .select(id_col,
-                        F.explode(F.split(F.col(text_col), " "))
-                        .alias("word"))
-                .filter(F.col("word") != ""))
-    return (exploded.join(vocab, "word")
+    return (_words(docs, text_col, id_col).join(F.broadcast(vocab), "word")
             .groupBy(id_col)
             .agg(F.sum("_ntok").alias(out_col)))

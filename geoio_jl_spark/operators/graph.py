@@ -7,10 +7,10 @@ connected-components (operators/components.py) on the engine's graph
 side.  Scale shape: the EDGE table is the big thing and is touched once
 per iteration by an equi-join on ``src`` (shuffle on the edge key,
 AQE-coalesced); the RANK table is |nodes| — orders of magnitude smaller
-— and is the only thing that changes, localCheckpointed per round
-(bounded lineage, components.py discipline).  No collect in the loop;
-the single driver scalar is |nodes| (metadata-scale, same contract as
-the IVF seeds).
+— and is the only thing that changes, localCheckpointed every
+``CHECKPOINT_EVERY`` rounds (bounded lineage, components.py
+discipline).  No collect in the loop; the single driver scalar is
+|nodes| (metadata-scale, same contract as the IVF seeds).
 
 Determinism / oracle-exactness: ranks are FIXED-POINT int64
 (``scale`` = 10^12).  Every division is ``floor(int / int-as-double)``
@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10 ** 12
+# pagerank materializes the ranks every this many rounds
+CHECKPOINT_EVERY = 2
 
 
 def _floor_div(num, den):
@@ -38,8 +40,7 @@ def _floor_div(num, den):
 
 def pagerank(edges: DataFrame, iters: int = 5,
              src_col: str = "src", dst_col: str = "dst",
-             damping_pct: int = 85,
-             checkpoint_every: int = 2) -> DataFrame:
+             damping_pct: int = 85) -> DataFrame:
     """(src, dst) edge table -> (node, r) fixed-point ranks after
     ``iters`` synchronous rounds.
 
@@ -78,6 +79,6 @@ def pagerank(edges: DataFrame, iters: int = 5,
                                        * F.coalesce(F.col("s"), F.lit(0)),
                                        F.lit(100)))
                          .cast("bigint").alias("r")))
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint()
     return ranks

@@ -704,26 +704,10 @@ FROM pairs JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash over token hashes (exact bit arithmetic both
-    engines). Plan shape: one row per token, ONE groupBy(doc_id) with 32
-    conditional sums — the naive explode-per-bit plan amplifies the
-    shuffle ×32; here partial aggregation combines map-side and the
-    shuffle carries a single 32-long row per (partition, doc)."""
-    docs = _read(spark, sf_dir, "documents")
-    toks = D.tokens_sql("text", "spark")
-    hashed = docs.select(
-        "doc_id", F.explode(F.expr(toks)).alias("tok")
-    ).select("doc_id", F.expr(D.md5_int60("tok", "spark")).alias("h"))
-    votes = [
-        F.sum(F.expr(
-            f"CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END"
-        )).alias(f"v{j}")
-        for j in range(32)
-    ]
-    sig = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN shiftleft(CAST(1 AS BIGINT), {j}) "
-        f"ELSE CAST(0 AS BIGINT) END)" for j in range(32))
-    return (hashed.groupBy("doc_id").agg(*votes)
-            .select("doc_id", F.expr(sig).alias("simhash")))
+    engines), one groupBy(doc_id) with 32 conditional sums — see
+    ``dedup.simhash_signatures``."""
+    from geoio_jl_spark.operators.dedup import simhash_signatures
+    return simhash_signatures(_read(spark, sf_dir, "documents"))
 
 
 def _sql_simhash() -> str:
@@ -771,15 +755,9 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = scored.join(F.broadcast(queries),
                        F.col("vec_id") != F.col("query_id"))
     dot = F.expr(_DOT.format(a="embedding", b="qe"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("cos", dot / (F.sqrt("_na") * F.sqrt("_nb")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return KNN._rank_topk(
+        cand.withColumn("cos", dot / (F.sqrt("_na") * F.sqrt("_nb"))),
+        "query_id", "cos", "vec_id", 5, descending=True)
 
 
 def _sql_cosine_topk() -> str:

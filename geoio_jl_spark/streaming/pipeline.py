@@ -7,7 +7,8 @@ stateless map, so the batch operators run unchanged per micro-batch.
 - ``stream_assign_cells`` — stateless streaming transform (no state store)
 - ``windowed_event_counts`` — tumbling window + watermark for late data
 - ``stream_point_in_polygon`` — foreachBatch wrapper running the batch
-  salted join against a (small, broadcast) polygon table per micro-batch
+  broadcast ``point_in_polygon_join`` against a (small) polygon table per
+  micro-batch
 """
 
 from __future__ import annotations

@@ -1,12 +1,11 @@
-"""BPE trainer (operators/bpe.py): the classic Sennrich worked example,
-a differential against a pure-Python reference trainer, and per-word
-apply semantics."""
+"""BPE trainer and encoder (operators/bpe.py): the classic Sennrich
+worked example, differentials against pure-Python reference trainer and
+tokenizer, and per-word apply semantics."""
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from geoio_jl_spark.operators.bpe import (END, apply_bpe, train_bpe,
+from geoio_jl_spark.operators.bpe import (END, MAX_MERGES, encode_bpe,
+                                          tokenize_vocab, train_bpe,
                                           word_counts)
 
 
@@ -41,6 +40,37 @@ def _ref_train(word_cnt: dict[str, int], n: int) -> list[tuple[str, int]]:
     return merges
 
 
+def _tokenize_word_py(word: str, ordered_pairs: list[tuple[str, str]]
+                      ) -> list[str]:
+    """Reference tokenizer: apply merges in rank order, passes until
+    fixpoint — emulating the replace chain EXACTLY, including its
+    boundary-space rule: a ``replace(' a b ', ' ab ')`` match consumes
+    the separator before the following token, so within one pass the
+    token right after a merged pair can never START the next match (e.g.
+    a^7 with merge (a,a) becomes ``aa a aa a a`` in pass one, not
+    ``aa aa aa a``)."""
+    syms = list(word) + [END]
+    for a, b in ordered_pairs:
+        while True:
+            out, i, changed = [], 0, False
+            n = len(syms)
+            while i < n:
+                if i + 1 < n and syms[i] == a and syms[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                    changed = True
+                    if i < n:        # boundary space consumed: emit the
+                        out.append(syms[i])   # next token unmergeable
+                        i += 1
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+            if not changed:
+                break
+    return syms
+
+
 def test_sennrich_worked_example(spark):
     """low×5 lower×2 newest×6 widest×3 → es, est, est</w>, l o, lo w…"""
     words = (["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
@@ -70,21 +100,21 @@ def test_apply_never_merges_across_words(spark):
     merges = train_bpe(docs, 3)
     # learned: (a b), (ab </w>) — then nothing (single symbol per word)
     assert [m[0] for m in merges] == ["a b", "ab </w>"]
-    out = apply_bpe(docs, merges).collect()[0]["bpe_sym"]
+    words = spark.createDataFrame([("ab",), ("ab",)], ["word"])
+    out = [r["sym"] for r in tokenize_vocab(words, merges).collect()]
     assert out == ["ab</w>", "ab</w>"]
 
 
 def test_apply_unseen_word_falls_back_to_chars(spark):
     train = spark.createDataFrame([(0, "aaaa aaaa")], ["doc_id", "text"])
     merges = train_bpe(train, 2)
-    other = spark.createDataFrame([(0, "xy")], ["doc_id", "text"])
-    out = apply_bpe(other, merges).collect()[0]["bpe_sym"]
+    other = spark.createDataFrame([("xy",)], ["word"])
+    out = [r["sym"] for r in tokenize_vocab(other, merges).collect()]
     assert out == [f"x y {END}"]
 
 
 def test_encode_bpe_counts_hand_case(spark):
     """3-doc corpus, 2 learned merges, per-doc counts computed by hand."""
-    from geoio_jl_spark.operators.bpe import encode_bpe
     docs = spark.createDataFrame(
         [(1, "aa aa ab"), (2, "aa"), (3, "b b aa")],
         ["doc_id", "text"])
@@ -98,7 +128,6 @@ def test_encode_bpe_counts_hand_case(spark):
     out = {r["doc_id"]: r["n_bpe_sym"]
            for r in encode_bpe(docs, merges).collect()}
     # independent check: tokenize each word with the python reference
-    from geoio_jl_spark.operators.bpe import _tokenize_word_py
     ordered = [tuple(p.split(" ")) for p, _ in merges]
     def ntok(text):
         return sum(len(_tokenize_word_py(w, ordered))
@@ -107,41 +136,34 @@ def test_encode_bpe_counts_hand_case(spark):
 
 
 def test_kernel_tokenizer_equals_jvm_chain(spark):
-    """Arrow kernel (Sennrich fixpoint loop) vs JVM replace chain on
-    adversarial words: repeated-symbol runs (KwKwK analog), boundary
-    markers, unseen chars, 1-char words."""
-    from geoio_jl_spark.operators.bpe import (tokenize_vocab,
-                                              tokenize_vocab_kernel)
+    """JVM replace chain vs the Python fixpoint reference on adversarial
+    words: repeated-symbol runs (KwKwK analog), boundary markers, unseen
+    chars, 1-char words."""
     words = ["aaaa", "aaaaaaa", "abab", "ababab", "a", "b", "ba",
              "aab", "baa", "xyz", "aax", "xaa", "aaxaa"]
     merges = ["a a", "aa aa", "a b", "ab ab", f"b {END}"]
     df = spark.createDataFrame([(w,) for w in words], ["word"])
     jvm = {r["word"]: r["sym"]
            for r in tokenize_vocab(df, merges).collect()}
-    ker = {r["word"]: r["sym"]
-           for r in tokenize_vocab_kernel(df, merges).collect()}
-    assert jvm == ker
-
-
-def test_encode_bpe_kernel_path_matches_jvm(spark):
-    from geoio_jl_spark.operators.bpe import encode_bpe
-    docs = spark.createDataFrame(
-        [(1, "the cat sat on the mat"), (2, "the bat and the rat"),
-         (3, "a aa aaa aaaa")], ["doc_id", "text"])
-    merges = train_bpe(docs, 6)
-    a = {r["doc_id"]: r["n_bpe_sym"]
-         for r in encode_bpe(docs, merges, how="jvm").collect()}
-    b = {r["doc_id"]: r["n_bpe_sym"]
-         for r in encode_bpe(docs, merges, how="kernel").collect()}
-    assert a == b
+    ordered = [tuple(m.split(" ")) for m in merges]
+    ref = {w: " ".join(_tokenize_word_py(w, ordered)) for w in words}
+    assert jvm == ref
 
 
 def test_encode_bpe_broadcast_plan(spark):
-    """broadcast_vocab=True must produce a BroadcastHashJoin (no corpus
-    shuffle for the join), and the per-doc agg a partial aggregate."""
-    from geoio_jl_spark.operators.bpe import encode_bpe
+    """The vocab join must be a BroadcastHashJoin (no corpus shuffle for
+    the join), and the per-doc agg a partial aggregate."""
     docs = spark.createDataFrame(
         [(i, "w%d common" % (i % 7)) for i in range(50)],
         ["doc_id", "text"])
     plan = encode_bpe(docs, ["c o"])._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    assert "partial_sum" in plan
+
+
+def test_tokenize_vocab_merge_limit(spark):
+    """Beyond MAX_MERGES the apply raises the named limit, not a codegen
+    failure."""
+    df = spark.createDataFrame([("ab",)], ["word"])
+    with pytest.raises(ValueError, match=f"at most {MAX_MERGES}"):
+        tokenize_vocab(df, ["a b"] * (MAX_MERGES + 1))

@@ -14,8 +14,7 @@ FAST = [
     "extent", "cell_counts", "valid_counts", "invalid_rows", "centroid",
     "grid_tiles", "token_stats", "fingerprint", "cosine_topk",
     "events_window",
-    # round-6 additions (fast at sf0.001; the slower bpe_encode is
-    # covered by the full parity gate)
+    # round-6 additions (fast at sf0.001)
     "geohash_cells", "focal_mean", "pagerank", "bm25_score",
     # the two MinHash-LSH operators (DuckDB oracles ~4 s and ~1.5 s here)
     "minhash_lsh", "minhash_star_edges",
@@ -26,6 +25,9 @@ FAST = [
     # the two time-bucketed operators (session_rollup runs real users hot;
     # the asof carry-in is checked by the hot-path test below)
     "asof_join", "session_rollup",
+    # the registry builders that call their operator (dedup's simhash,
+    # bpe's encode; bpe_encode ~9 s here)
+    "simhash", "bpe_encode",
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

@@ -25,9 +25,6 @@ def _reference_sessions(pdf: pd.DataFrame):
                 cur = [cur[0], us, cur[2] + 1]
         if cur is not None:
             out.append((user, *cur, "open"))
-    closed = {(u, a, b, n) for (u, a, b, n, *rest) in
-              [row if len(row) == 5 else (*row, None) for row in out]
-              if not rest or rest[0] != "open"}
     return out
 
 
