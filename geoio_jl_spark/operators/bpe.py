@@ -35,8 +35,9 @@ _REPLACE_PASSES = 6
 END = "</w>"
 # train_bpe materializes the vocabulary every this many merge rounds
 CHECKPOINT_EVERY = 4
-# tokenize_vocab's expression-depth limit (merges per apply)
-MAX_MERGES = 64
+# tokenize_vocab's expression-depth limit (merges per apply); the
+# driver's analyzer overflows its stack from 38 merges up
+MAX_MERGES = 32
 
 
 def _words(docs: DataFrame, text_col: str, *keep: str) -> DataFrame:

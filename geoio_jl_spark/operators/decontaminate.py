@@ -23,20 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _gram_arr(toks_col: str, n: int):
-    """n-gram windows over an ALREADY-materialized token array column.
-    (Inlining ``split`` here would re-tokenize the text inside the
-    lambda for every gram position — O(tokens²) per doc; the two-step
-    projection is the guaranteed-linear shape, same lesson as
-    operators/dedup.exploded_shingles.)"""
-    toks = F.col(toks_col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " ")),
-    ).otherwise(F.array().cast("array<string>"))
+from geoio_jl_spark.operators.dedup import shingles_from_tokens
 
 
 def eval_ngrams(bench: DataFrame, n: int,
@@ -44,7 +31,8 @@ def eval_ngrams(bench: DataFrame, n: int,
     """Distinct token n-grams of the (small) evaluation corpus."""
     return (bench
             .select(F.split(F.col(text_col), " ").alias("_toks"))
-            .select(F.explode(_gram_arr("_toks", n)).alias("gram"))
+            .select(F.explode(F.expr(shingles_from_tokens("_toks", n)))
+                    .alias("gram"))
             .distinct())
 
 
@@ -58,7 +46,8 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 8,
                 .select(F.col(id_col),
                         F.split(F.col(text_col), " ").alias("_toks"))
                 .select(F.col(id_col),
-                        F.explode(_gram_arr("_toks", n)).alias("gram")))
+                        F.explode(F.expr(shingles_from_tokens("_toks", n)))
+                        .alias("gram")))
     if use_hash:
         grams = grams.select(F.xxhash64("gram").alias("gh")).distinct()
         exploded = exploded.select(id_col, F.xxhash64("gram").alias("gh"))

@@ -245,19 +245,22 @@ def image_features(df: DataFrame, col: str = "image",
     return df.withColumn(out, _feat(F.col(col)))
 
 
-def _box_downscale(a: np.ndarray, factor: int) -> np.ndarray:
-    """Area-average (box-filter) downscale by an integer factor — the
-    correct anti-aliased reduction for training-data thumbnails, pure
-    numpy reshape-mean.  Trailing rows/cols that don't fill a full
-    ``factor`` block are cropped (documented contract; a web thumbnailer
-    does the same)."""
-    h, w, c = a.shape
-    hh, ww = h // factor, w // factor
-    if hh == 0 or ww == 0:
-        raise ValueError(f"image {h}x{w} smaller than factor {factor}")
-    blocks = a[: hh * factor, : ww * factor].reshape(
-        hh, factor, ww, factor, c).astype(np.float64)
-    return (blocks.mean(axis=(1, 3)) + 0.5).astype(np.uint8)
+def _area_mean(a: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Area-mean resample of the first two axes to (out_h, out_w): output
+    row j averages source rows ``[j*h//out_h, (j+1)*h//out_h)``, columns
+    likewise — two ``np.add.reduceat`` passes, float64.  A cell whose
+    source span is empty (enlarging) takes the source row/column its
+    span starts at, so enlarging replicates pixels.  Identity when the
+    input already has the target shape."""
+    h, w = a.shape[:2]
+    if (h, w) == (out_h, out_w):
+        return a
+    ye = np.arange(out_h + 1) * h // out_h
+    xe = np.arange(out_w + 1) * w // out_w
+    sums = np.add.reduceat(np.add.reduceat(a.astype(np.float64), ye[:-1],
+                                           axis=0), xe[:-1], axis=1)
+    n = np.outer(np.maximum(np.diff(ye), 1), np.maximum(np.diff(xe), 1))
+    return sums / n.reshape(n.shape + (1,) * (a.ndim - 2))
 
 
 def resize_images(df: DataFrame, factor: int, col: str = "image",
@@ -287,8 +290,14 @@ def resize_images(df: DataFrame, factor: int, col: str = "image",
                     outv.append(MAGIC_IMG + _s.pack("<HHB", w, h, c)
                                 + np.ascontiguousarray(small).tobytes())
                 else:
-                    small = _box_downscale(_decode_real(buf), factor)
-                    outv.append(encode_png(small))
+                    # box filter; rows/cols short of a block are cropped
+                    a = _decode_real(buf)
+                    hh, ww = a.shape[0] // factor, a.shape[1] // factor
+                    if hh == 0 or ww == 0:
+                        raise ValueError(f"image {a.shape[:2]} smaller "
+                                         f"than factor {factor}")
+                    small = _area_mean(a[:hh * factor, :ww * factor], hh, ww)
+                    outv.append(encode_png((small + 0.5).astype(np.uint8)))
             except Exception:
                 outv.append(None)
                 continue
@@ -415,21 +424,6 @@ def _to_gray(a: np.ndarray) -> np.ndarray:
     return a.astype(np.float64).mean(axis=2)
 
 
-def _pool(gray: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Block-mean downsample to (out_h, out_w); identity when the input
-    already has the target shape."""
-    h, w = gray.shape
-    if (h, w) == (out_h, out_w):
-        return gray
-    ye = (np.arange(out_h + 1) * h) // out_h
-    xe = (np.arange(out_w + 1) * w) // out_w
-    out = np.empty((out_h, out_w))
-    for j in range(out_h):
-        for i in range(out_w):
-            out[j, i] = gray[ye[j]:ye[j + 1], xe[i]:xe[i + 1]].mean()
-    return out
-
-
 _POW2 = (np.uint64(1) << np.arange(64, dtype=np.uint64))
 
 
@@ -437,7 +431,7 @@ def dhash64(a: np.ndarray) -> int:
     """64-bit difference hash: gray → 8×9 block means → bit(j,i) =
     p[j,i+1] > p[j,i] (8 comparisons × 8 rows), packed little-endian
     bit (j*8+i) and reinterpreted as a signed 64-bit int."""
-    g = _pool(_to_gray(a), 8, 9)
+    g = _area_mean(_to_gray(a), 8, 9)
     bits = (g[:, 1:] > g[:, :-1]).ravel()
     return int((bits * _POW2).sum(dtype=np.uint64).astype(np.int64))
 
@@ -446,7 +440,7 @@ def phash64(a: np.ndarray) -> int:
     """64-bit perceptual hash: 32×32 block means → 2-D DCT-II → the
     8×8 low-frequency block (DC excluded from the threshold) →
     above-median bits, packed like dhash64."""
-    g = _pool(_to_gray(a), 32, 32)
+    g = _area_mean(_to_gray(a), 32, 32)
     n = 32
     k = np.arange(n)
     basis = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
@@ -460,12 +454,13 @@ def phash64(a: np.ndarray) -> int:
 
 def synthetic_cluster_pngs(df: DataFrame, id_col: str = "doc_id",
                            out: str = "image") -> DataFrame:
-    """Deterministic 9×8 grayscale PNG per id — FIXED-SIZE pixel
-    clusters (id // 8, so near-dup pair volume stays LINEAR in corpus
-    size; the round-5 original used id % 25, which made every pair of
-    the n/25 cluster members a near-dup and grew the output
-    quadratically with scale factor) plus a single-pixel +50
-    perturbation at (id % 9, id % 8) that flips at most 2 dHash bits.
+    """Deterministic 9×8 grayscale PNG per id — 8-member pixel clusters
+    (c = id // 8) plus a single-pixel +50 perturbation at
+    (id % 9, id % 8) that flips at most 2 dHash bits.  The base pattern
+    is a mod-251 mix of c, so clusters 251 apart share one base image
+    and pair with each other too: near-dup pair volume grows
+    QUADRATICALLY with corpus size (1,785 → 60,505 → 6,105,497 rows at
+    sf0.01 → sf0.1 → the sf1.0 proxy), not linearly.
     Test/oracle scaffolding: the pixel arithmetic is replayable in pure
     SQL while the bytes go through the real encode_png → decode_png
     path."""

@@ -3,13 +3,13 @@ hypertable-rollup pattern: web maps and OLAP cubes serve every zoom
 level from pre-aggregated tiles).
 
 Extends the engine's single-level ``raster_to_vector_tiles`` (oracle
-``grid_tiles``) up the zoom hierarchy.  Scale shape: the corpus is
-shuffled ONCE, at the finest zoom (map-side combined count); every
-coarser level then aggregates the PREVIOUS level's tile table with a
-4:1 fan-in, so the level tables shrink geometrically and the points are
-never re-scanned.  Exactness: ``floor(floor(x/a)/2) == floor(x/(2a))``
-for non-negative coordinates, so the hierarchical rollup equals
-aggregating the raw points at each zoom directly (the oracle's form).
+``grid_tiles``) up the zoom hierarchy.  Scale shape: one lazy plan.  The
+corpus is scanned and shuffled ONCE, at the finest zoom (map-side
+combined count); the small base-tile table is then exploded once per
+zoom step k and re-aggregated at ``(tx >> k, ty >> k)``, so the points
+are never re-scanned.  Exactness: ``floor(x/a) >> k == floor(x/(a·2^k))``
+for non-negative coordinates, so the rollup equals aggregating the raw
+points at each zoom directly (the oracle's form).
 """
 
 from __future__ import annotations
@@ -33,27 +33,16 @@ def tile_pyramid(points: DataFrame, x_col: str, y_col: str,
     ts = F.lit(base_tile)
     base_agg = (F.count("*") if weight_col is None
                 else F.sum(weight_col)).alias("n")
-    # Each level is materialized once (localCheckpoint): a lazy union
-    # would duplicate the whole upstream chain per branch — Catalyst
-    # does not share common subplans across union branches, so the
-    # corpus would be re-scanned and re-shuffled once PER LEVEL.  The
-    # level tables are tile counts (tiny), so materializing them costs
-    # almost nothing and the corpus is scanned exactly once.
-    cur = (points
-           .select(F.floor(F.col(x_col) / ts).alias("tx"),
-                   F.floor(F.col(y_col) / ts).alias("ty"),
-                   *([weight_col] if weight_col else []))
-           .groupBy("tx", "ty")
-           .agg(base_agg)
-           .localCheckpoint())
-    out = cur.select(F.lit(max_zoom).alias("zoom"), "tx", "ty", "n")
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        cur = (cur
-               .select(F.floor(F.col("tx") / 2).alias("tx"),
-                       F.floor(F.col("ty") / 2).alias("ty"), "n")
-               .groupBy("tx", "ty")
-               .agg(F.sum("n").alias("n"))
-               .localCheckpoint())
-        out = out.unionByName(
-            cur.select(F.lit(z).alias("zoom"), "tx", "ty", "n"))
-    return out
+    base = (points
+            .select(F.floor(F.col(x_col) / ts).alias("tx"),
+                    F.floor(F.col(y_col) / ts).alias("ty"),
+                    *([weight_col] if weight_col else []))
+            .groupBy("tx", "ty")
+            .agg(base_agg))
+    return (base
+            .select("tx", "ty", "n", F.explode(
+                F.sequence(F.lit(0), F.lit(max_zoom - min_zoom))).alias("k"))
+            .groupBy((F.lit(max_zoom) - F.col("k")).alias("zoom"),
+                     F.expr("shiftright(tx, k)").alias("tx"),
+                     F.expr("shiftright(ty, k)").alias("ty"))
+            .agg(F.sum("n").alias("n")))

@@ -5,7 +5,7 @@
 - ``cosine_topk_partial``: the 100-TB shape — broadcast query matrix,
   numpy matmul local top-k per partition (map-side combine), merge the
   P×Q×k survivors with one tiny shuffle. Same results as the window plan.
-- ``lsh_signature_expr`` / ``ann_candidate_pairs``: random-hyperplane LSH.
+- ``lsh_signature_sql`` / ``ann_candidate_pairs``: random-hyperplane LSH.
   The hyperplanes are integer-lattice vectors derived by formula, so the
   signature is reproducible in ANSI SQL (DuckDB oracle) — sign bits of
   left-fold dot products are bit-exact across engines.
@@ -57,11 +57,25 @@ def lsh_signature_sql(emb: str, dialect: str, n_planes: int = N_PLANES) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+# the one fold dot: left-fold double arithmetic, bit-identical to the
+# DuckDB oracle's list_reduce (``{a}``/``{b}`` are array column names)
+_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+)
+
+
 def ann_candidate_pairs(emb_df: DataFrame, id_col: str = "vec_id",
                         emb_col: str = "embedding",
                         max_bucket: int | None = None) -> DataFrame:
-    """Bucket embeddings by LSH signature; candidate pairs share a bucket.
-    The bucket join is a plain equi-join — Catalyst/AQE territory.
+    """Bucket embeddings by LSH signature; candidate pairs share a bucket
+    → (id_a, id_b, cos) with the exact fold cosine.
+
+    Signature (16 fold-dots) and squared norm are computed ONCE per
+    vector into a lazily checkpointed table; the ``sig`` self-join
+    carries the vectors, so the cross dot is the only per-pair fold.
+    Hint-free: at 100 TB the embeddings relation never fits a
+    broadcast, AQE may pick one at runtime when a side is small.
 
     ``max_bucket`` applies the same stop-list rule as the shingle DF cap:
     a bucket of n members emits n² pair rows, so signatures holding more
@@ -69,19 +83,25 @@ def ann_candidate_pairs(emb_df: DataFrame, id_col: str = "vec_id",
     embeddings) are excluded via broadcast anti-join before the self-join.
     Documented recall trade — oversized buckets carry near-zero
     discriminative value at web scale."""
-    sig = emb_df.select(
-        id_col, F.expr(lsh_signature_sql(emb_col, "spark")).alias("sig"))
+    sig = (emb_df.select(
+        id_col, emb_col,
+        F.expr(lsh_signature_sql(emb_col, "spark")).alias("sig"),
+        F.expr(_DOT.format(a=emb_col, b=emb_col)).alias("_n2"))
+        .localCheckpoint(eager=False))
     if max_bucket is not None:
         hot = (sig.groupBy("sig").agg(F.count("*").alias("n"))
                .filter(F.col("n") > max_bucket).select("sig"))
         sig = sig.join(F.broadcast(hot), "sig", "left_anti")
-    left = sig.alias("l")
-    right = sig.alias("r")
+    a = sig.select(F.col(id_col).alias("id_a"), F.col(emb_col).alias("e_a"),
+                   "sig", F.col("_n2").alias("_na"))
+    b = sig.select(F.col(id_col).alias("id_b"), F.col(emb_col).alias("e_b"),
+                   "sig", F.col("_n2").alias("_nb"))
+    dot = F.expr(_DOT.format(a="e_a", b="e_b"))
     return (
-        left.join(right, "sig")
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"), "sig")
+        a.join(b, "sig")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", dot / (F.sqrt("_na") * F.sqrt("_nb")))
+        .select("id_a", "id_b", "cos")
     )
 
 

@@ -358,20 +358,15 @@ _NTX, _NTY, _TILE = 72, 34, 500  # 72x34 tiles of 500 centidegrees
 
 
 def q_grid_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from geoio_jl_spark.operators.raster import raster_to_vector_tiles
     grid = spark.range(_NTX * _NTY).select(
         F.col("id").alias("tile_id"),
         (F.col("id") % _NTX * _TILE).alias("tx0"),
         (F.floor(F.col("id") / F.lit(float(_NTX))).cast("bigint") * _TILE).alias("ty0"),
     )
     boxes = _triangles(spark, sf_dir).select("poly_id", "minx", "miny", "maxx", "maxy")
-    return (
-        grid.join(
-            F.broadcast(boxes),
-            (F.col("tx0") <= F.col("maxx")) & (F.col("tx0") + _TILE > F.col("minx"))
-            & (F.col("ty0") <= F.col("maxy")) & (F.col("ty0") + _TILE > F.col("miny")),
-        )
-        .select("tile_id", "poly_id")
-    )
+    return (raster_to_vector_tiles(grid, boxes, _TILE, _TILE, x="tx0", y="ty0")
+            .select("tile_id", "poly_id"))
 
 
 SQL_GRID_TILES = f"""
@@ -733,13 +728,8 @@ FROM votes GROUP BY doc_id
 #    (left-fold double arithmetic: bit-identical across engines)
 # ---------------------------------------------------------------------------
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-
-
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from geoio_jl_spark.operators.similarity import _DOT
     emb = _read(spark, sf_dir, "embeddings")
     # r8: both norm folds hoisted OUT of the |emb| × |queries| cross
     # product — the candidate-side norm runs once per vector (not once
@@ -1023,36 +1013,9 @@ SQL_BPE_TOKENS = (
 # ---------------------------------------------------------------------------
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geoio_jl_spark.operators.similarity import lsh_signature_sql
-    emb = _read(spark, sf_dir, "embeddings")
-    # r8 plan diet: signature (16 interpreted fold-dots) and the squared
-    # norm are computed ONCE per vector into a localCheckpoint'd table;
-    # the old shape computed sig on both join sides and re-ran the norm
-    # fold per candidate pair, and fetched vectors back through two extra
-    # equi-joins.  The self-join below carries the vectors, so the only
-    # per-pair fold left is the cross dot — the one that is genuinely
-    # per-pair.  Still hint-free: at 100 TB the embeddings relation
-    # never fits a broadcast, AQE may pick one at runtime when small
-    # (tests/test_similarity.py::test_embedding_near_dup_plan_no_broadcast).
-    sig_tbl = (emb.select(
-        "vec_id", "embedding",
-        F.expr(lsh_signature_sql("embedding", "spark")).alias("sig"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("_n2"))
-        .localCheckpoint(eager=False))
-    a = sig_tbl.select(F.col("vec_id").alias("id_a"),
-                       F.col("embedding").alias("e_a"),
-                       "sig", F.col("_n2").alias("_na"))
-    b = sig_tbl.select(F.col("vec_id").alias("id_b"),
-                       F.col("embedding").alias("e_b"),
-                       "sig", F.col("_n2").alias("_nb"))
-    dot = F.expr(_DOT.format(a="e_a", b="e_b"))
-    return (
-        a.join(b, "sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", dot / (F.sqrt("_na") * F.sqrt("_nb")))
-        .filter(F.col("cos") >= 0.25)
-        .select("id_a", "id_b", "cos")
-    )
+    from geoio_jl_spark.operators.similarity import ann_candidate_pairs
+    return (ann_candidate_pairs(_read(spark, sf_dir, "embeddings"))
+            .filter(F.col("cos") >= 0.25))
 
 
 def _sql_embedding_near_dup() -> str:
@@ -1287,7 +1250,7 @@ FROM sess GROUP BY user_id, sess_id
 # ---------------------------------------------------------------------------
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geoio_jl_spark.operators.similarity import ivf_index, ivf_search
+    from geoio_jl_spark.operators.similarity import _DOT, ivf_index, ivf_search
     emb = _read(spark, sf_dir, "embeddings")
     assigned, centroids = ivf_index(emb, k_centroids=8, n_iter=2)
     queries = (emb.orderBy("vec_id").limit(5)
@@ -1306,15 +1269,12 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot = F.expr(_DOT.format(a="embedding", b="qe"))
     na = F.expr(_DOT.format(a="embedding", b="embedding"))
     nb = F.expr(_DOT.format(a="qe", b="qe"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col("vec_id").asc())
-    return (res.drop("cos", "rank")
+    cand = (res.drop("cos", "rank")
             .join(emb.select("vec_id", "embedding"), "vec_id")
             .join(F.broadcast(queries), "query_id")
-            .withColumn("cos", dot / (F.sqrt(na) * F.sqrt(nb)))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "vec_id", "cos", "rank"))
+            .withColumn("cos", dot / (F.sqrt(na) * F.sqrt(nb))))
+    return KNN._rank_topk(cand, "query_id", "cos", "vec_id", 5,
+                          descending=True)
 
 
 def _sql_ivf_topk() -> str:
@@ -2557,11 +2517,15 @@ GROUP BY doc_id
 # ---------------------------------------------------------------------------
 
 def q_store_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import atexit
+    import shutil
     import tempfile
 
     from geoio_jl_spark.plans import store as ST
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    # the result reads the store lazily: keep it until the process exits
     d = tempfile.mkdtemp(prefix="geoio_store_resolve_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
     ST.ingest(spark, d, docs, epoch=0, key_col="doc_id")
     rev2 = (docs.filter(F.col("doc_id") % 7 == 0)
             .withColumn("text", F.concat(F.col("text"), F.lit(" [rev2]"))))

@@ -167,3 +167,11 @@ def test_tokenize_vocab_merge_limit(spark):
     df = spark.createDataFrame([("ab",)], ["word"])
     with pytest.raises(ValueError, match=f"at most {MAX_MERGES}"):
         tokenize_vocab(df, ["a b"] * (MAX_MERGES + 1))
+
+
+def test_tokenize_vocab_at_merge_limit_collects(spark):
+    """A table of exactly MAX_MERGES merges plans and runs (the limit
+    sits below the depth at which the driver's analyzer overflows)."""
+    df = spark.createDataFrame([("ab",)], ["word"])
+    rows = tokenize_vocab(df, ["a b"] * MAX_MERGES).collect()
+    assert len(rows) == 1

@@ -2,6 +2,8 @@
 over binary columns (codec layer stubbed with the deterministic fake
 format; Spark-side schema + batching contracts are the real test)."""
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -155,6 +157,61 @@ def test_dhash_hand_case_and_brightness_invariance():
     a = rng.integers(0, 200, (16, 18, 1)).astype(np.uint8)
     assert M.dhash64(a) == M.dhash64(np.minimum(a + 40, 255))
     assert M.phash64(a) == M.phash64(np.minimum(a + 40, 255))
+
+
+def _loop_pool(gray, out_h, out_w):
+    """Per-cell reference: mean of the source block of every output cell
+    (NaN where the block is empty)."""
+    h, w = gray.shape
+    ye = (np.arange(out_h + 1) * h) // out_h
+    xe = (np.arange(out_w + 1) * w) // out_w
+    out = np.full((out_h, out_w), np.nan)
+    for j in range(out_h):
+        for i in range(out_w):
+            blk = gray[ye[j]:ye[j + 1], xe[i]:xe[i + 1]]
+            if blk.size:
+                out[j, i] = blk.mean()
+    return out
+
+
+def test_area_mean_matches_per_cell_loop():
+    """Single-channel grids equal the per-cell block mean wherever that
+    block is non-empty, and are finite everywhere."""
+    rng = np.random.default_rng(5)
+    for h, w in [(8, 9), (16, 18), (31, 40), (32, 32), (37, 65), (100, 3)]:
+        g = rng.integers(0, 256, (h, w)).astype(np.float64)
+        for out_h, out_w in [(8, 9), (32, 32)]:
+            ref = _loop_pool(g, out_h, out_w)
+            got = M._area_mean(g, out_h, out_w)
+            assert np.isfinite(got).all()
+            ok = np.isfinite(ref)
+            np.testing.assert_array_equal(got[ok], ref[ok])
+
+
+def test_area_mean_identity_and_enlarge():
+    g = np.arange(72, dtype=np.float64).reshape(8, 9)
+    assert M._area_mean(g, 8, 9) is g
+    small = np.array([[1.0, 2.0], [3.0, 4.0]])
+    np.testing.assert_array_equal(
+        M._area_mean(small, 4, 4), np.repeat(np.repeat(small, 2, 0), 2, 1))
+    rgb = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
+    np.testing.assert_array_equal(
+        M._area_mean(rgb, 1, 2),
+        rgb.reshape(1, 2, 2, 2, 3).mean(axis=(1, 3)))
+
+
+def test_small_images_hash_without_empty_cells():
+    """Images under 32 px still get a structural pHash: two distinct
+    random 16x18 images hash apart, and no empty-slice mean runs."""
+    rng = np.random.default_rng(13)
+    a = rng.integers(0, 256, (16, 18, 1)).astype(np.uint8)
+    b = rng.integers(0, 256, (16, 18, 1)).astype(np.uint8)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        ha, hb = M.phash64(a), M.phash64(b)
+        M.dhash64(rng.integers(0, 256, (3, 5, 3)).astype(np.uint8))
+    assert ha != hb
+    assert ha != 0 and hb != 0
 
 
 def test_phash_detects_structure_not_noise():

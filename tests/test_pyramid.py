@@ -25,17 +25,23 @@ def test_hierarchical_equals_direct(spark):
 
 
 def test_single_corpus_scan(spark):
-    """The raw point table must be scanned exactly once: every level is
-    checkpointed, so the union reads materialized level tables instead
-    of duplicating the corpus aggregation per branch (a lazy union
-    re-scans the source once PER LEVEL — Catalyst does not share common
-    subplans across union branches)."""
+    """One lazy plan: the raw point table appears once in the executed
+    plan (every zoom is rolled up from the one base-tile aggregate, not
+    a union branch that re-scans the source per level), nothing is
+    checkpointed, and building the plan launches no Spark job."""
     pts = spark.range(100).select(F.col("id").alias("x"),
                                   F.col("id").alias("y"))
-    plan = (tile_pyramid(pts, "x", "y", max_zoom=3)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Range (0, 100" not in plan          # base level materialized
-    assert plan.count("Scan ExistingRDD") == 4  # one per level, no rescans
+    sc = spark.sparkContext
+    sc.setJobGroup("pyramid_build", "tile_pyramid plan build")
+    try:
+        df = tile_pyramid(pts, "x", "y", max_zoom=3)
+        built = sc.statusTracker().getJobIdsForGroup("pyramid_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert built == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Range (0, 100") == 1
+    assert "Scan ExistingRDD" not in plan
 
 
 def test_zoom_validation(spark):

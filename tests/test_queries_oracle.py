@@ -28,6 +28,9 @@ FAST = [
     # the registry builders that call their operator (dedup's simhash,
     # bpe's encode; bpe_encode ~9 s here)
     "simhash", "bpe_encode",
+    # ... and similarity's near-dup / IVF, decontaminate, the pyramid
+    "embedding_near_dup", "semantic_dedup", "ivf_topk", "decontaminate",
+    "tile_pyramid",
 ]
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

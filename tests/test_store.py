@@ -1,6 +1,8 @@
 """Log-structured corpus store (plans/store.py): CDC upsert, merge-on-
 read resolve, compaction, idempotence."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -304,3 +306,37 @@ def test_cdc_lookup_reads_only_key_hash_epoch(spark, tmp_path):
             ._jdf.queryExecution().executedPlan().toString())
     schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
     assert schemas == ["struct<url:string,content_hash:bigint,epoch:int>"]
+
+
+def test_store_resolve_registers_tempdir_cleanup(spark, tmp_path,
+                                                 monkeypatch):
+    """The registry's store_resolve builder keeps its scratch store until
+    the process exits, then removes it: it registers an atexit rmtree
+    for exactly the directory it created."""
+    import atexit
+    import shutil
+    import tempfile
+
+    from geoio_jl_spark import queries as Q
+
+    made, registered = [], []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(prefix=None):
+        made.append(real_mkdtemp(prefix=prefix, dir=str(tmp_path)))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *a, **kw: registered.append((fn, a, kw)))
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}", "en") for i in range(30)], ["doc_id", "text", "lang"])
+    monkeypatch.setattr(Q, "_read", lambda spark, sf_dir, table: docs)
+    out = Q.q_store_resolve(spark, "unused")
+    assert out.count() == 30
+    assert len(made) == 1
+    assert registered == [(shutil.rmtree, (made[0],),
+                           {"ignore_errors": True})]
+    fn, a, kw = registered[0]
+    fn(*a, **kw)
+    assert not os.path.exists(made[0])
