@@ -42,6 +42,9 @@ from pyspark.sql import functions as F
 from geoio_jl_spark import dialect
 from geoio_jl_spark.operators.cells import neighbor_cells
 
+# ``knn_join_pruned``'s cap on the range boxes OR-ed into the scan filter
+MAX_SCAN_CLAUSES = 32
+
 
 def _local_topk(best: dict, q_ids: np.ndarray, score: np.ndarray,
                 ids: np.ndarray, k: int, keep: np.ndarray | None = None) -> None:
@@ -268,13 +271,12 @@ def knn_join_pruned(points: DataFrame, queries: "DataFrame | list", k: int,
                     px: str = "lon_i", py: str = "lat_i",
                     qid: str = "query_id", qx: str = "qx", qy: str = "qy",
                     point_id: str = "doc_id",
-                    cell_stats: "DataFrame | dict | None" = None,
-                    max_scan_clauses: int = 32) -> DataFrame:
+                    cell_stats: "DataFrame | dict | None" = None) -> DataFrame:
     """Scan-pruned exact kNN join (same rows as ``knn_join_window``).
 
     Physical shape: a DISJUNCTION of range boxes on (px, py) covering the
     per-query rectangles (overlapping rects merged, capped at
-    ``max_scan_clauses`` clauses) — plain ``>=``/``<=`` comparisons that
+    ``MAX_SCAN_CLAUSES`` clauses) — plain ``>=``/``<=`` comparisons that
     Spark pushes into the parquet scan (PushedFilters; footer min/max
     skipping on a Z-order-clustered layout).  Unlike a single global
     bounding box, the OR-of-boxes survives dispersed query batches: two
@@ -318,7 +320,7 @@ def knn_join_pruned(points: DataFrame, queries: "DataFrame | list", k: int,
     # OR-of-boxes over the (merged) rectangles: the predicate that
     # reaches the parquet scan (PushedFilters) and prunes files/row-groups
     boxes = _merge_rects([(r[3], r[4], r[5], r[6]) for r in rects],
-                         max_scan_clauses)
+                         MAX_SCAN_CLAUSES)
     cond = None
     for (xl, xh, yl, yh) in boxes:
         c = ((F.col(px) >= xl) & (F.col(px) <= xh)

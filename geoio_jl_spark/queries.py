@@ -1194,7 +1194,7 @@ FROM embeddings e LEFT JOIN comp c ON c.node = e.vec_id
 
 # ---------------------------------------------------------------------------
 # Q: batch sessionization (gap-based session windows) — the batch twin
-# of streaming/pipeline.sessionize (applyInPandasWithState), routed
+# of streaming/pipeline.sessionize (native session_window), routed
 # through the skew-safe operator (operators/sessionize.py: hot users
 # split into time buckets, renumbered by a per-bucket fix-up join).
 # hot_threshold=50 puts real sf users into buckets, so the plain-SQL

@@ -9,6 +9,8 @@ stateless map, so the batch operators run unchanged per micro-batch.
 - ``stream_point_in_polygon`` — foreachBatch wrapper running the batch
   broadcast ``point_in_polygon_join`` against a (small) polygon table per
   micro-batch
+- ``sessionize`` + ``stitch_partial_sessions`` — gap sessions as native
+  ``session_window`` partials per (user, time shard), merged per user
 """
 
 from __future__ import annotations
@@ -73,124 +75,48 @@ def stream_url_dedup(stream: DataFrame, ts: str = "ts",
             .dropDuplicatesWithinWatermark(["canon_url"]))
 
 
-def _gap_sessions(grouped, key_cols: list[str], gap_seconds: int,
-                  ts_col: str, use_timeout: bool) -> DataFrame:
-    """The gap-session state machine, run by ``applyInPandasWithState``
-    over ``grouped``: state is the open session (start_us, end_us, n);
-    emits one ``(*key_cols, session_start_us, session_end_us, n_events)``
-    row per closed session."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    cols = [*key_cols, "session_start_us", "session_end_us", "n_events"]
-
-    def fn(key, pdf_iter, state):
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                closed.append((*key, *state.get))
-                state.remove()
-            yield pd.DataFrame(closed, columns=cols)
-            return
-        cur = state.get if state.exists else None
-        events = []
-        for pdf in pdf_iter:
-            events.extend(int(t.value // 1000)
-                          for t in pd.to_datetime(pdf[ts_col]))
-        events.sort()
-        for us in events:
-            if cur is None:
-                cur = (us, us, 1)
-            elif us - cur[1] > gap_seconds * 1_000_000:
-                closed.append((*key, *cur))
-                cur = (us, us, 1)
-            else:
-                cur = (cur[0], us, cur[2] + 1)
-        if cur is not None:
-            state.update(cur)
-            if use_timeout:
-                state.setTimeoutDuration(gap_seconds * 1000)
-        yield pd.DataFrame(closed, columns=cols)
-
-    return grouped.applyInPandasWithState(
-        fn, outputStructType=", ".join(f"{c} long" for c in cols),
-        stateStructType="start_us long, end_us long, n long",
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if use_timeout
-                     else GroupStateTimeout.NoTimeout))
-
-
 def sessionize(stream: DataFrame, gap_seconds: int = 1800,
-               user_col: str = "user_id", ts_col: str = "ts",
-               use_timeout: bool = True) -> DataFrame:
-    """Custom stateful operator: session windows per user via
-    ``applyInPandasWithState`` (the engine's example of state the built-in
-    windows can't express — session gap logic with carried state).
+               user_col: str = "user_id", ts_col: str = "ts") -> DataFrame:
+    """Partial gap sessions per (user, time shard): one native
+    ``session_window`` aggregation, the streaming twin of
+    operators/sessionize.py.  Two events at most ``gap_seconds`` apart
+    share a session (exactly the gap joins, one microsecond more
+    splits), as in the batch ``session_rollup``.
 
-    Emits one row per closed session: (user_id, session_start_us,
-    session_end_us, n_events). Sessions close when a new event arrives
-    more than ``gap_seconds`` after the last one; the state timeout closes
-    trailing sessions.
+    The key carries ``shard = floor(ts_us / (2 * gap_us))`` so a hot
+    user's state fans out over shards instead of one state partition.
+    Each row is a maximal run within one shard: (user_col, shard,
+    session_start_us, session_end_us, n_events); partials in
+    non-adjacent shards are more than a gap apart, and
+    ``stitch_partial_sessions`` merges the adjacent ones into sessions.
+
+    ``ts_col`` must be a TIMESTAMP.  Complete mode returns every
+    session, still-open ones included.  Append mode needs
+    ``stream.withWatermark(ts_col, delay)`` (Spark refuses the query
+    without one): a session is emitted, and its state freed, once the
+    event-time watermark passes its last event plus the gap —
+    deterministic under replay, with no processing-time timeout.
     """
-    return _gap_sessions(stream.groupBy(user_col), ["user_id"],
-                         gap_seconds, ts_col, use_timeout)
-
-
-def sessionize_sharded(stream: DataFrame, gap_seconds: int = 1800,
-                       shard_seconds: int | None = None,
-                       user_col: str = "user_id", ts_col: str = "ts",
-                       use_timeout: bool = True) -> DataFrame:
-    """Skew-safe streaming sessionization — the streaming port of the
-    time-bucket machinery in operators/sessionize.py.
-
-    ``sessionize`` keys its state by the bare user, so one bot with 10⁷
-    events per micro-batch serializes into a single state partition.
-    Here stage 1 keys the stateful operator by (user, time_shard) with
-    ``shard = floor(event_us / shard_us)`` — the hot user's stream fans
-    out across shards — and emits PARTIAL sessions (maximal runs within
-    a shard).  ``stitch_partial_sessions`` merges adjacent partials
-    across shard boundaries; its input is one row per partial session
-    (≤ a handful per user-shard), so the per-user stitch is bounded no
-    matter how many raw events the user produced.
-
-    Requires ``shard_seconds >= gap_seconds`` (default 2×gap): an empty
-    intermediate shard then guarantees a session break, so only
-    consecutive-shard partials can ever merge.
-
-    Emits one row per CLOSED partial: (user_id, shard, session_start_us,
-    session_end_us, n_events).  The trailing partial of each (user,
-    shard) stays in state until the processing-time timeout closes it —
-    ON by default (r5 ADVICE fix: with NoTimeout a quiesced shard's
-    trailing session never closed and its state never freed; pass
-    ``use_timeout=False`` only for single-batch replay tests where no
-    later batch exists to fire the timeout).
-    """
-    if shard_seconds is None:
-        shard_seconds = 2 * gap_seconds
-    if shard_seconds < gap_seconds:
-        raise ValueError("shard_seconds must be >= gap_seconds so empty "
-                         "shards imply a session break")
-    shard_us = shard_seconds * 1_000_000
-
-    sharded = stream.withColumn(
-        "_shard",
-        F.floor(F.unix_micros(F.col(ts_col).cast("timestamp"))
-                / F.lit(shard_us)))
-    return _gap_sessions(sharded.groupBy(user_col, "_shard"),
-                         ["user_id", "shard"], gap_seconds, ts_col,
-                         use_timeout)
+    ts_us = F.unix_micros(F.col(ts_col))
+    shard = F.floor(ts_us / F.lit(2 * gap_seconds * 1_000_000))
+    return (stream
+            .groupBy(F.col(user_col), shard.alias("shard"),
+                     F.session_window(ts_col, f"{gap_seconds} seconds"))
+            .agg(F.min(ts_us).alias("session_start_us"),
+                 F.max(ts_us).alias("session_end_us"),
+                 F.count("*").alias("n_events"))
+            .drop("session_window"))
 
 
 def stitch_partial_sessions(partials: DataFrame, gap_seconds: int = 1800,
                             user_col: str = "user_id") -> DataFrame:
-    """Merge stage-1 partial sessions across shard boundaries (batch /
+    """Merge ``sessionize`` partials across shard boundaries (batch /
     foreachBatch; input is one row per partial, so the per-user window
     is bounded by the session count, not the event count).  Two partials
     merge iff the next starts within the gap of the previous end —
-    partials within one shard are > gap apart by construction, and
-    ``shard_seconds >= gap_seconds`` makes merges possible only between
-    consecutive shards.  → (user_id, session_start_us, session_end_us,
-    n_events)."""
+    partials within one shard are > gap apart by construction, and the
+    2×gap shard width makes merges possible only between consecutive
+    shards.  → (user_col, session_start_us, session_end_us, n_events)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(user_col).orderBy("session_start_us")

@@ -1,110 +1,140 @@
-"""Custom stateful streaming operator: sessionization via
-applyInPandasWithState, checked against a pandas reference."""
+"""Sessionization: the streaming ``sessionize`` (native session_window
+partials per user × time shard) + ``stitch_partial_sessions`` and the
+skew-safe batch operator, each checked against one pandas gap-rule
+reference and against each other."""
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from geoio_jl_spark.streaming.pipeline import sessionize
+from geoio_jl_spark.streaming.pipeline import (sessionize,
+                                               stitch_partial_sessions)
 
 GAP_S = 1800
+GAP_US = GAP_S * 1_000_000
+SHARD_US = 2 * GAP_US  # sessionize's time-shard width
 
 
-def _reference_sessions(pdf: pd.DataFrame):
-    """All sessions per user (incl. the trailing open one)."""
-    out = []
-    for user, grp in pdf.groupby("user_id"):
-        ts = sorted(int(t.value // 1000) for t in pd.to_datetime(grp["ts"]))
+def _reference_sessions(pdf: pd.DataFrame, keys: list[str]) -> set:
+    """Gap sessions per ``keys`` group of ``pdf`` (``keys`` + ``ts_us``
+    columns): {(*key, start_us, end_us, n_events)}, open ones included.
+    Two events at most ``GAP_US`` apart share a session."""
+    out = set()
+    for key, grp in pdf.groupby(keys):
+        key = tuple(int(k) for k in (key if isinstance(key, tuple)
+                                     else (key,)))
         cur = None
-        for us in ts:
-            if cur is None:
-                cur = [us, us, 1]
-            elif us - cur[1] > GAP_S * 1_000_000:
-                out.append((user, *cur))
-                cur = [us, us, 1]
+        for us in sorted(int(t) for t in grp["ts_us"]):
+            if cur is not None and us - cur[1] <= GAP_US:
+                cur = (cur[0], us, cur[2] + 1)
             else:
-                cur = [cur[0], us, cur[2] + 1]
-        if cur is not None:
-            out.append((user, *cur, "open"))
+                if cur is not None:
+                    out.add((*key, *cur))
+                cur = (us, us, 1)
+        out.add((*key, *cur))
     return out
 
 
-def test_sessionize_matches_reference(spark, sf_dir, tmp_path):
+def _stream_partials(spark, src: str, tmp_path, name: str,
+                     user_col: str = "user_id"):
+    """``sessionize`` over a parquet file stream of ``src`` in complete
+    mode: every partial, still-open ones included."""
+    schema = spark.read.parquet(src).schema
+    # parquet timestamps infer as TimestampNTZ; session_window and
+    # unix_micros need TimestampType
+    stream = (spark.readStream.schema(schema).parquet(src)
+              .withColumn("ts", F.col("ts").cast("timestamp")))
+    q = (sessionize(stream, gap_seconds=GAP_S, user_col=user_col)
+         .writeStream.format("memory").queryName(name)
+         .outputMode("complete").trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+         .start())
+    assert q.awaitTermination(180)
+    return spark.table(name)
+
+
+def _ts_us(spark, src: str, user_col: str = "user_id") -> pd.DataFrame:
+    """(user_col, ts_us, shard) of ``src`` for the pandas reference."""
+    pdf = (spark.read.parquet(src)
+           .select(user_col, F.unix_micros(F.col("ts").cast("timestamp"))
+                   .alias("ts_us")).toPandas())
+    pdf["shard"] = pdf["ts_us"] // SHARD_US
+    return pdf
+
+
+def _rows(df, *cols) -> list:
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _sf_events_dir(sf_dir, tmp_path) -> str:
     import os
-    src = f"{sf_dir}/events.parquet"
     d = tmp_path / "events_dir"
     d.mkdir()
-    os.symlink(src, d / "events.parquet")
-    schema = spark.read.parquet(str(d)).schema
-    stream = spark.readStream.schema(schema).parquet(str(d))
-    # single-batch replay: no later batch fires the timeout, so the
-    # default use_timeout=True would stall availableNow for minutes
-    out = sessionize(stream, gap_seconds=GAP_S, use_timeout=False)
-    q = (
-        out.writeStream.format("memory").queryName("sessions")
-        .outputMode("append").trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {(r["user_id"], r["session_start_us"], r["session_end_us"],
-            r["n_events"])
-           for r in spark.sql("SELECT * FROM sessions").collect()}
+    os.symlink(f"{sf_dir}/events.parquet", d / "events.parquet")
+    return str(d)
 
-    pdf = spark.read.parquet(src).toPandas()
-    all_sessions = _reference_sessions(pdf)
-    closed = set()
-    trailing = set()
-    for row in all_sessions:
-        if len(row) == 5 and row[4] == "open":
-            trailing.add((row[0], row[1], row[2], row[3]))
-        else:
-            closed.add(tuple(row[:4]))
-    # one availableNow batch: every closed session is emitted; trailing
-    # (still-open) sessions stay in state awaiting the timeout
-    assert got == closed
-    assert len(trailing) > 0  # sanity: state actually holds something
+
+_PARTIAL = ["shard", "session_start_us", "session_end_us", "n_events"]
+_SESSION = ["session_start_us", "session_end_us", "n_events"]
+
+
+def test_sessionize_matches_reference(spark, sf_dir, tmp_path):
+    src = _sf_events_dir(sf_dir, tmp_path)
+    partials = _stream_partials(spark, src, tmp_path, "sessions")
+    pdf = _ts_us(spark, src)
+    assert (set(_rows(partials, "user_id", *_PARTIAL))
+            == _reference_sessions(pdf, ["user_id", "shard"]))
+    stitched = stitch_partial_sessions(partials, gap_seconds=GAP_S)
+    got = _rows(stitched, "user_id", *_SESSION)
+    assert got == sorted(_reference_sessions(pdf, ["user_id"]))
+    assert len(got) > len(pdf["user_id"].unique())  # real session breaks
 
 
 def test_batch_session_rollup_matches_streaming(spark, sf_dir, tmp_path):
     """The oracle-checked batch sessionization (q_session_rollup) and
-    the stateful streaming operator must carve identical sessions:
-    closed streaming sessions ∪ trailing open state == batch sessions."""
+    the streaming sessionizer carve identical sessions, row for row."""
     from geoio_jl_spark import queries as Q
-    from geoio_jl_spark.streaming.pipeline import sessionize
 
-    batch = {(r["user_id"], r["start_us"], r["end_us"], r["n_events"])
-             for r in Q.q_session_rollup(spark, sf_dir).collect()}
+    src = _sf_events_dir(sf_dir, tmp_path)
+    partials = _stream_partials(spark, src, tmp_path, "sess_batch_parity")
+    stitched = stitch_partial_sessions(partials, gap_seconds=GAP_S)
+    batch = Q.q_session_rollup(spark, sf_dir)
+    assert (_rows(stitched, "user_id", *_SESSION)
+            == _rows(batch, "user_id", "start_us", "end_us", "n_events"))
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = str(tmp_path / "ev_stream")
-    ev.coalesce(1).write.parquet(src)
-    stream = (spark.readStream.schema(ev.schema).parquet(src)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    out = sessionize(stream, use_timeout=False)
-    q = (out.writeStream.format("memory").queryName("sess_batch_parity")
-         .outputMode("append").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck")).start())
-    q.awaitTermination(180)
-    closed = {(r["user_id"], r["session_start_us"], r["session_end_us"],
-               r["n_events"])
-              for r in spark.sql(
-                  "SELECT * FROM sess_batch_parity").collect()}
-    # trailing sessions stay in state at end-of-stream; every closed
-    # streaming session must be a batch session, and the remainder must
-    # be exactly one trailing (last) session per user
-    assert closed <= batch
-    remaining = batch - closed
-    per_user = {}
-    for u, s, e, n in remaining:
-        per_user.setdefault(u, []).append((s, e, n))
-    assert all(len(v) == 1 for v in per_user.values())
-    # and each user's remaining session is their LAST batch session
-    last_by_user = {}
-    for u, s, e, n in batch:
-        if u not in last_by_user or s > last_by_user[u][0]:
-            last_by_user[u] = (s, e, n)
-    for u, v in per_user.items():
-        assert v[0] == last_by_user[u]
+
+def test_sessionize_user_col_roundtrip(spark, tmp_path):
+    """A key not named user_id survives sessionize → stitch."""
+    import numpy as np
+    rng = np.random.default_rng(3)
+    us = np.cumsum(rng.integers(1, GAP_US // 2, 300))
+    us[::40] += 3 * GAP_US  # some real breaks
+    src = str(tmp_path / "uid_src")
+    (spark.createDataFrame(pd.DataFrame(
+        {"uid": rng.integers(0, 4, 300), "ts_us": us}))
+     .withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+     .coalesce(1).write.parquet(src))
+    partials = _stream_partials(spark, src, tmp_path, "uid_sessions",
+                                user_col="uid")
+    stitched = stitch_partial_sessions(partials, gap_seconds=GAP_S,
+                                       user_col="uid")
+    assert (_rows(stitched, "uid", *_SESSION)
+            == sorted(_reference_sessions(_ts_us(spark, src, "uid"),
+                                          ["uid"])))
+
+
+def test_sessionize_gap_boundary(spark, tmp_path):
+    """Events exactly the gap apart share a session; one microsecond
+    more splits them."""
+    src = str(tmp_path / "gap_src")
+    rows = [(1, 0), (1, GAP_US), (2, 0), (2, GAP_US + 1)]
+    (spark.createDataFrame(rows, "user_id long, ts_us long")
+     .withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
+     .coalesce(1).write.parquet(src))
+    partials = _stream_partials(spark, src, tmp_path, "gap_sessions")
+    got = _rows(stitch_partial_sessions(partials, gap_seconds=GAP_S),
+                "user_id", *_SESSION)
+    assert got == [(1, 0, GAP_US, 2), (2, 0, 0, 1),
+                   (2, GAP_US + 1, GAP_US + 1, 1)]
 
 
 # ---------------------------------------------------------------------------
@@ -112,8 +142,6 @@ def test_batch_session_rollup_matches_streaming(spark, sf_dir, tmp_path):
 # (time buckets + carry-in + renumbering) must label events identically
 # to the single-window form.
 # ---------------------------------------------------------------------------
-
-GAP_US = GAP_S * 1_000_000
 
 
 def _events(spark, sf_dir):
@@ -224,18 +252,14 @@ def test_skew_path_edge_cases(spark):
 
 
 # ---------------------------------------------------------------------------
-# Streaming skew path: sessionize_sharded (state keyed by user × time
-# shard) + stitch_partial_sessions == the batch sessions.
+# Streaming skew path: a hot user's partials fan out over time shards
+# and stitch back into the batch sessions.
 # ---------------------------------------------------------------------------
 
 
 def test_sharded_streaming_sessionize_differential(spark, tmp_path):
     import numpy as np
     from geoio_jl_spark.operators.sessionize import session_rollup
-    from geoio_jl_spark.streaming.pipeline import (sessionize_sharded,
-                                                   stitch_partial_sessions)
-    shard_s = 2 * GAP_S
-    shard_us = shard_s * 1_000_000
     rng = np.random.default_rng(7)
     rows = []
     eid = 0
@@ -258,52 +282,14 @@ def test_sharded_streaming_sessionize_differential(spark, tmp_path):
     src = str(tmp_path / "ev_sharded")
     (ev.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
        .coalesce(1).write.parquet(src))
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = sessionize_sharded(stream, gap_seconds=GAP_S,
-                             shard_seconds=shard_s, use_timeout=False)
-    q = (out.writeStream.format("memory").queryName("sharded_sessions")
-         .outputMode("append").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck_sh")).start())
-    q.awaitTermination(180)
-    closed = {tuple(r) for r in spark.sql(
-        "SELECT user_id, shard, session_start_us, session_end_us, n_events"
-        " FROM sharded_sessions").collect()}
-
-    # pandas reference: partial sessions per (user, shard)
-    partials = []
-    pdf["shard"] = pdf["ts_us"] // shard_us
-    for (u, sh), grp in pdf.groupby(["user_id", "shard"]):
-        cur = None
-        for us in sorted(grp["ts_us"]):
-            if cur is None:
-                cur = [us, us, 1]
-            elif us - cur[1] > GAP_US:
-                partials.append((u, sh, *cur))
-                cur = [us, us, 1]
-            else:
-                cur = [cur[0], us, cur[2] + 1]
-        partials.append((u, sh, *cur, "open"))
-    all_partials = {p[:5] for p in partials}
-    trailing = {p[:5] for p in partials if len(p) == 6}
-    # one availableNow batch: exactly the non-trailing partials close
-    assert closed == all_partials - trailing
-    assert len(closed) > 20  # the hot user produced real shard volume
-
-    # stitching ALL partials (closed + trailing, i.e. what a timeout
-    # flush would emit) reproduces the batch sessions exactly
-    pall = spark.createDataFrame(
-        pd.DataFrame(sorted(all_partials),
-                     columns=["user_id", "shard", "session_start_us",
-                              "session_end_us", "n_events"]))
-    stitched = stitch_partial_sessions(pall, gap_seconds=GAP_S)
-    batch = session_rollup(ev, GAP_US, hot_threshold=1000, n_buckets=8)
-    a = sorted((r["user_id"], r["session_start_us"],
-                r["session_end_us"], r["n_events"])
-               for r in stitched.collect())
-    b = sorted((r["user_id"], r["start_us"], r["end_us"], r["n_events"])
-               for r in batch.collect())
-    assert a == b
+    partials = _stream_partials(spark, src, tmp_path, "sharded_sessions")
+    got = _rows(partials, "user_id", *_PARTIAL)
+    pdf["shard"] = pdf["ts_us"] // SHARD_US
+    assert set(got) == _reference_sessions(pdf, ["user_id", "shard"])
     # skew evidence: the hot user's state fans out across many shard keys
-    hot_shards = {sh for (u, sh, *_) in all_partials if u == 99}
-    assert len(hot_shards) > 10
+    assert len({sh for (u, sh, *_) in got if u == 99}) > 10
+
+    stitched = stitch_partial_sessions(partials, gap_seconds=GAP_S)
+    batch = session_rollup(ev, GAP_US, hot_threshold=1000, n_buckets=8)
+    assert (_rows(stitched, "user_id", *_SESSION)
+            == _rows(batch, "user_id", "start_us", "end_us", "n_events"))

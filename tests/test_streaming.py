@@ -142,15 +142,50 @@ def test_stream_url_dedup_canonical_variants_collapse(spark, tmp_path):
         "https://a.com/p?id=1", "https://a.com/p?id=2", "https://b.org/q"]
 
 
-def test_sessionize_sharded_timeout_default_on():
-    """r5 ADVICE fix: the trailing-partial timeout must be the default —
-    NoTimeout leaves quiesced shards' sessions open (and their state
-    resident) forever in production."""
-    import inspect
+def test_sessionize_append_evicts_on_watermark(spark, tmp_path):
+    """Append mode: a session is emitted, and its state freed, only once
+    the event-time watermark passes its last event plus the gap.  Two
+    files, one per micro-batch: the first file's sessions stay in state
+    until the second file moves the watermark past them."""
+    import os
 
-    from geoio_jl_spark.streaming.pipeline import sessionize_sharded
-    assert inspect.signature(sessionize_sharded) \
-        .parameters["use_timeout"].default is True
+    from geoio_jl_spark.streaming.pipeline import sessionize
+
+    gap_us = 1800 * 1_000_000
+    src = tmp_path / "sess_src"
+    src.mkdir()
+    files = [[(1, 0), (1, 60_000_000), (1, 120_000_000), (2, 1_000_000)],
+             [(1, 10 * gap_us), (2, 10 * gap_us + 5)]]
+    for i, rows in enumerate(files):
+        path = src / f"part{i}.parquet"
+        pd.DataFrame({"user_id": [u for u, _ in rows],
+                      "ts": pd.to_datetime([t for _, t in rows], unit="us",
+                                           utc=True)}
+                     ).to_parquet(path, coerce_timestamps="us")
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # file order
+    schema = spark.read.parquet(str(src)).schema
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(str(src))
+              .withWatermark("ts", "0 seconds"))
+    emitted = {}
+
+    def collect(df, batch_id):
+        emitted[batch_id] = sorted(
+            tuple(r) for r in df.select(
+                "user_id", "session_start_us", "session_end_us",
+                "n_events").collect())
+
+    q = (sessionize(stream).writeStream.foreachBatch(collect)
+         .outputMode("append").trigger(availableNow=True)
+         .option("checkpointLocation", str(tmp_path / "ck_sess")).start())
+    assert q.awaitTermination(180)
+    first_file = [(1, 0, 120_000_000, 3), (2, 1_000_000, 1_000_000, 1)]
+    assert emitted[0] == [] and emitted[1] == []
+    assert sorted(r for rows in emitted.values() for r in rows) == first_file
+    # the second file's sessions stay open: no later event passes them
+    state = [p["stateOperators"][0]["numRowsTotal"]
+             for p in q.recentProgress]
+    assert max(state) == 4 and state[-1] == 2
 
 
 def test_stream_pii_and_decontaminate_compose(spark, sf_dir, tmp_path):
