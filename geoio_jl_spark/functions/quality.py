@@ -10,10 +10,9 @@ LITERAL weight array (shipped with the plan exactly like a broadcast
 small model) — ZERO shuffle, zero Python crossing, scoring is a pure
 projection that scales embarrassingly at 100 TB.
 
-Two hash modes, the minhash convention (operators/dedup.py):
-``fast_hash=True`` uses JVM xxhash64 (the 100-TB path);
-the default md5-substring hash is dialect-portable so the DuckDB
-oracle replays the identical model bit-for-bit (the fold sum matches
+The bigram hash is the dialect-portable md5-substring hash of
+operators/dedup.py, so the DuckDB oracle replays the identical model
+bit-for-bit (the fold sum matches
 Spark's ``aggregate`` left fold exactly; the final sigmoid is rounded
 to 6 decimals to absorb libm exp ulp differences).
 
@@ -42,16 +41,13 @@ def quality_weights(buckets: int = QUALITY_BUCKETS) -> list[float]:
 
 def hashed_bigram_score(docs: DataFrame, weights: list[float] | None = None,
                         bias: float = QUALITY_BIAS, text_col: str = "text",
-                        id_col: str = "doc_id", fast_hash: bool = False,
+                        id_col: str = "doc_id",
                         out: str = "quality") -> DataFrame:
     """→ docs + ``out`` column (rounded sigmoid score)."""
     if weights is None:
         weights = quality_weights()
     b = len(weights)
-    if fast_hash:
-        h = f"pmod(xxhash64(g), {b})"
-    else:
-        h = f"pmod({D.md5_int60('g', 'spark')}, {b})"
+    h = f"pmod({D.md5_int60('g', 'spark')}, {b})"
     toks = D.tokens_sql(text_col, "spark")
     # explicit empty-array guard: Spark's sequence(1, 0) DESCENDS
     # ([1, 0]) and ANSI element_at then throws on index 0 for docs

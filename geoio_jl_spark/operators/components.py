@@ -108,20 +108,16 @@ def connected_components(edges: DataFrame, src: str = "rep",
 
 
 def dedup_keepers(docs: DataFrame, components: DataFrame,
-                  id_col: str = "doc_id",
-                  broadcast_limit: int = 20_000_000) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """Append (component, keep) to the document table: keep=true for the
     component minimum and for docs in no component (unique docs).
 
-    Components usually hold only near-dup members (a small fraction of
-    docs) → broadcast left join, no shuffle of the doc table. On
-    boilerplate-heavy corpora where MOST docs are members, a doc-sized
-    broadcast would OOM the executors, so above ``broadcast_limit`` rows
-    (one cheap count on the already-materialized component table) the
-    join falls back to a shuffled left join and AQE takes over."""
-    comp = components.withColumnRenamed("node", id_col)
-    if comp.count() <= broadcast_limit:
-        comp = F.broadcast(comp)
-    return (docs.join(comp, id_col, "left")
+    A plain left join: components usually hold only near-dup members (a
+    small fraction of docs), and AQE's runtime size check broadcasts
+    them then; a doc-sized component table (boilerplate-heavy corpora)
+    stays a shuffled join instead of a broadcast that would OOM the
+    executors.  Building the plan launches no job."""
+    return (docs.join(components.withColumnRenamed("node", id_col),
+                      id_col, "left")
             .withColumn("keep", F.col("component").isNull()
                         | (F.col("component") == F.col(id_col))))

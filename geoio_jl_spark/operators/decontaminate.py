@@ -6,16 +6,8 @@ No reference counterpart (LLM-pipeline axis of the brief).  Scale shape:
 the eval side is orders of magnitude smaller than the training corpus,
 so its distinct n-gram set is built once and BROADCAST — the training
 side stays a scan → explode → broadcast-hash-semi-join → per-doc partial
-count, with no all-to-all shuffle of corpus n-grams.  At eval sets too
-large to broadcast raw strings, ``use_hash=True`` joins on xxhash64
-fingerprints (8 bytes/gram instead of ~10×), the standard trick.  The
-hash path is APPROXIMATE: a 64-bit collision between any corpus gram
-and any eval gram false-flags a clean doc (expected collisions grow
-with \\|corpus grams\\| × \\|eval grams\\| / 2^64 — negligible at test
-scale, a real consideration at 10^12 × 10^8), and colliding distinct
-grams merge in the per-doc count.  The string path is exact and is
-what the driver oracle runs; the two paths agree on collision-free
-data (asserted in tests).
+count, with no all-to-all shuffle of corpus n-grams.  The join is on
+the n-gram strings themselves, so the flag is exact.
 """
 
 from __future__ import annotations
@@ -37,8 +29,8 @@ def eval_ngrams(bench: DataFrame, n: int,
 
 
 def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 8,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  use_hash: bool = False) -> DataFrame:
+                  id_col: str = "doc_id",
+                  text_col: str = "text") -> DataFrame:
     """→ (id, n_overlap, contaminated): distinct eval n-grams found in
     each training doc, and a 0/1 flag."""
     grams = eval_ngrams(bench, n, text_col)
@@ -48,15 +40,9 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 8,
                 .select(F.col(id_col),
                         F.explode(F.expr(shingles_from_tokens("_toks", n)))
                         .alias("gram")))
-    if use_hash:
-        grams = grams.select(F.xxhash64("gram").alias("gh")).distinct()
-        exploded = exploded.select(id_col, F.xxhash64("gram").alias("gh"))
-        key = "gh"
-    else:
-        key = "gram"
-    hits = (exploded.join(F.broadcast(grams), key)
+    hits = (exploded.join(F.broadcast(grams), "gram")
             .groupBy(id_col)
-            .agg(F.count_distinct(key).alias("n_overlap")))
+            .agg(F.count_distinct("gram").alias("n_overlap")))
     return (docs.select(id_col)
             .join(hits, id_col, "left")
             .select(

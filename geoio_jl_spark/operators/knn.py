@@ -1,6 +1,6 @@
 """kNN join: for each query point, the k nearest data points.
 
-Two physical strategies, both returning identical rows:
+Two kernels plus a pruning filter, all returning identical rows:
 
 - ``knn_join_window`` — broadcast the (small) query side, theta-join, rank
   with ``row_number`` over (distance, tiebreak).  Simple; one shuffle of
@@ -13,21 +13,21 @@ Two physical strategies, both returning identical rows:
   |partitions| x |queries| x k survivors with one tiny shuffle.  Shuffle
   volume is O(P*Q*k), independent of |points|.
 
-- ``knn_join_pruned`` — the scan-pruned probe (reference analog: the
-  GPKG R-tree index, gpkg.jl:411-448): per-cell counts (a tiny, reusable
-  stats table) drive a driver-side Chebyshev ring expansion
-  (``cells.neighbor_cells``) until each query has >= k candidates; the
-  covered rings give an *exact* upper bound on the kth distance, and the
-  resulting per-query coordinate rectangles become plain range predicates
-  that reach the parquet scan as PushedFilters — on a Z-order-clustered
-  layout (operators/zorder.py) the scan opens only the files whose footer
-  stats overlap the rectangles instead of reading every row.
+- ``knn_join_pruned`` — the same map-side top-k behind a scan filter
+  (reference analog: the GPKG R-tree index, gpkg.jl:411-448): per-cell
+  counts (a tiny, reusable stats dict) drive a driver-side Chebyshev ring
+  expansion (``cells.neighbor_cells``) until each query has >= k
+  candidates; the covered rings give an *exact* upper bound on the kth
+  distance, and the resulting per-query coordinate rectangles, merged into
+  an OR of range boxes, reach the parquet scan as PushedFilters — on a
+  Z-order-clustered layout (operators/zorder.py) the scan opens only the
+  files whose footer stats overlap the boxes instead of reading every row.
 
 Distances are squared-Euclidean in integer centidegrees (exact, hash-stable
 across engines).  Every plan ranks by (distance, point id) in one window
 (``_rank_topk``); the map-side selection (``_local_topk``) keeps the whole
 set tied at the k-th distance before cutting by that same order, so the
-partial plan is exact at any partition count.
+partial and pruned plans are exact at any partition count.
 """
 
 from __future__ import annotations
@@ -89,19 +89,15 @@ def knn_join_window(points: DataFrame, queries: DataFrame, k: int,
                       qid, "dist2", point_id, k)
 
 
-def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
-                     px: str = "lon_i", py: str = "lat_i",
-                     qid: str = "query_id", qx: str = "qx", qy: str = "qy",
-                     point_id: str = "doc_id") -> DataFrame:
-    """Map-side local top-k, then global merge (scale path)."""
+def _topk_scan(points: DataFrame, qrows: list, k: int, px: str, py: str,
+               qid: str, point_id: str) -> DataFrame:
+    """Broadcast the driver-side ``(qid, qx, qy)`` rows, keep a local
+    top-k per partition (``_local_topk``), merge with ``_rank_topk``."""
     from geoio_jl_spark.shipping import ensure_pyfiles
     spark = points.sparkSession
     ensure_pyfiles(spark)
-    qrows = queries.select(qid, qx, qy).collect()  # query side is small by contract
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_x = np.array([r[1] for r in qrows], dtype=np.int64)
-    q_y = np.array([r[2] for r in qrows], dtype=np.int64)
-    bq = spark.sparkContext.broadcast((q_ids, q_x, q_y))
+    q = np.array(qrows, dtype=np.int64).reshape(-1, 3)
+    bq = spark.sparkContext.broadcast((q[:, 0], q[:, 1], q[:, 2]))
 
     def local_topk(batches):
         ids, xs, ys = bq.value
@@ -124,19 +120,13 @@ def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
     return _rank_topk(partial, qid, "dist2", point_id, k)
 
 
-def cell_count_stats(points: DataFrame, res: int,
-                     px: str = "lon_i", py: str = "lat_i") -> DataFrame:
-    """Per-cell point counts at resolution ``res`` — the tiny stats table
-    that drives ring expansion.  A column-pruned 2-int scan + one partial
-    agg; at 100 TB this is computed once per layout (or maintained
-    incrementally) and reused across every kNN query batch, exactly like
-    the reference keeps its R-tree persistent in the GPKG file
-    (gpkg.jl:411-448) instead of rebuilding it per query."""
-    e = dialect.cell_edge_centideg(res)
-    return (points
-            .groupBy(F.floor(F.col(px) / F.lit(float(e))).cast("bigint").alias("cx"),
-                     F.floor(F.col(py) / F.lit(float(e))).cast("bigint").alias("cy"))
-            .agg(F.count("*").alias("n")))
+def knn_join_partial(points: DataFrame, queries: DataFrame, k: int,
+                     px: str = "lon_i", py: str = "lat_i",
+                     qid: str = "query_id", qx: str = "qx", qy: str = "qy",
+                     point_id: str = "doc_id") -> DataFrame:
+    """Map-side local top-k, then global merge (scale path)."""
+    qrows = queries.select(qid, qx, qy).collect()  # small by contract
+    return _topk_scan(points, qrows, k, px, py, qid, point_id)
 
 
 def _query_rects(qrows, stats: dict, k: int, e: int):
@@ -144,7 +134,8 @@ def _query_rects(qrows, stats: dict, k: int, e: int):
     (cells.neighbor_cells) over the occupied-cell stats until the covered
     region holds >= k points, derive the exact max possible kth-NN
     distance (far corner of the covered square), and emit the coordinate
-    rectangle that provably contains the true k nearest.
+    rectangle ``(x_lo, x_hi, y_lo, y_hi)`` that provably contains the
+    true k nearest.
 
     Soundness: the k nearest candidates inside rings 0..r are all within
     d_max = dist(q, far corner of the ring-r square), so the true kth-NN
@@ -159,7 +150,7 @@ def _query_rects(qrows, stats: dict, k: int, e: int):
     min_y = min(c[1] for c in stats)
     max_y = max(c[1] for c in stats)
     rects = []
-    for q_id, qx, qy in qrows:
+    for _, qx, qy in qrows:
         qcx, qcy = qx // e, qy // e
         # worst-case ring: covers every occupied cell from this query
         # cell (bounds precomputed once — O(1) per query, not O(|cells|))
@@ -178,19 +169,24 @@ def _query_rects(qrows, stats: dict, k: int, e: int):
         d = math.isqrt(d2)
         if d * d < d2:
             d += 1
-        rects.append((q_id, qx, qy, qx - d, qx + d, qy - d, qy + d, d2))
+        rects.append((qx - d, qx + d, qy - d, qy + d))
     return rects
 
 
 def collect_cell_stats(points: DataFrame, res: int,
                        px: str = "lon_i", py: str = "lat_i") -> dict:
-    """``cell_count_stats`` collected to the driver-side dict the ring
-    planner consumes.  Compute ONCE per layout and pass to every
-    ``knn_join_pruned`` call on that table — the compute-once-per-layout
-    contract that mirrors the reference's persistent GPKG R-tree
-    (gpkg.jl:411-448)."""
-    return {(r["cx"], r["cy"]): r["n"]
-            for r in cell_count_stats(points, res, px, py).collect()}
+    """Per-cell point counts at resolution ``res``, ``{(cx, cy): n}`` — the
+    tiny stats dict that drives ring expansion.  A column-pruned 2-int
+    scan + one partial agg, collected.  Compute ONCE per layout and pass
+    to every ``knn_join_pruned`` call on that table, exactly like the
+    reference keeps its R-tree persistent in the GPKG file
+    (gpkg.jl:411-448) instead of rebuilding it per query."""
+    e = dialect.cell_edge_centideg(res)
+    counts = (points
+              .groupBy(F.floor(F.col(px) / F.lit(float(e))).cast("bigint"),
+                       F.floor(F.col(py) / F.lit(float(e))).cast("bigint"))
+              .count())
+    return {(cx, cy): n for cx, cy, n in counts.collect()}
 
 
 def _merge_rects(boxes: list, max_clauses: int) -> list:
@@ -213,8 +209,8 @@ def _merge_rects(boxes: list, max_clauses: int) -> list:
 
     A final fixpoint overlap-merge removes redundant clauses.  Merging
     only ever GROWS coverage, so the pushdown stays a superset of the
-    exact per-query rectangles (correctness comes from the
-    broadcast-join predicates downstream)."""
+    exact per-query rectangles, and the top-k kernel behind the filter
+    cuts each query's own rows exactly."""
     boxes = list({tuple(int(v) for v in b) for b in boxes})
     if not boxes:
         return []
@@ -266,72 +262,40 @@ def _merge_rects(boxes: list, max_clauses: int) -> list:
     return boxes
 
 
-def knn_join_pruned(points: DataFrame, queries: "DataFrame | list", k: int,
+def knn_join_pruned(points: DataFrame, queries: DataFrame, k: int,
                     res: int = 3,
                     px: str = "lon_i", py: str = "lat_i",
                     qid: str = "query_id", qx: str = "qx", qy: str = "qy",
                     point_id: str = "doc_id",
-                    cell_stats: "DataFrame | dict | None" = None) -> DataFrame:
+                    cell_stats: dict | None = None) -> DataFrame:
     """Scan-pruned exact kNN join (same rows as ``knn_join_window``).
 
-    Physical shape: a DISJUNCTION of range boxes on (px, py) covering the
-    per-query rectangles (overlapping rects merged, capped at
+    Physical shape: ``knn_join_partial``'s map-side top-k over
+    ``points`` filtered by a DISJUNCTION of range boxes on (px, py) that
+    cover the per-query rectangles (overlapping rects merged, capped at
     ``MAX_SCAN_CLAUSES`` clauses) — plain ``>=``/``<=`` comparisons that
     Spark pushes into the parquet scan (PushedFilters; footer min/max
     skipping on a Z-order-clustered layout).  Unlike a single global
     bounding box, the OR-of-boxes survives dispersed query batches: two
     query clusters on opposite sides of the world prune to two small
-    boxes instead of a union rectangle covering the whole extent.  Then a
-    broadcast join against the <=|Q| rectangle rows applies the exact
-    per-query range + distance-bound predicates, and the usual window
-    top-k ranks the survivors.  Candidate volume is
-    O(|Q| * k * ring-overshoot), independent of |points|.
+    boxes instead of a union rectangle covering the whole extent.
 
-    ``cell_stats`` may be the DataFrame from ``cell_count_stats`` or —
-    the amortized path — the dict from ``collect_cell_stats`` (no
-    per-call Spark action at all).
+    Exact: every point within a query's k-th distance lies inside that
+    query's rectangle, so the kernel's (dist2, id) cut over the filtered
+    rows keeps the same rows and ties as over all of them.
+
+    ``cell_stats`` is the dict from ``collect_cell_stats``; pass it to
+    amortize the stats scan over query batches on one layout (``None``
+    computes it per call).
     """
-    spark = points.sparkSession
-    if isinstance(cell_stats, dict):
-        stats = cell_stats
-    else:
-        if cell_stats is None:
-            cell_stats = cell_count_stats(points, res, px, py)
-        stats = {(r["cx"], r["cy"]): r["n"] for r in cell_stats.collect()}
-    e = dialect.cell_edge_centideg(res)
-    if isinstance(queries, list):
-        # amortized path: pre-collected (id, x, y) tuples — the query
-        # batch is driver-side by contract, so repeated calls pay zero
-        # Spark actions for planning
-        qrows = [(int(q), int(x), int(y)) for (q, x, y) in queries]
-    else:
-        qrows = [(r[0], r[1], r[2])
-                 for r in queries.select(qid, qx, qy).collect()]
-    rects = _query_rects(qrows, stats, k, e)
-    if not rects:
-        return (points.select(point_id).limit(0)
-                .withColumn(qid, F.lit(None).cast("bigint"))
-                .withColumn("dist2", F.lit(None).cast("bigint"))
-                .withColumn("rank", F.lit(None).cast("int"))
-                .select(qid, point_id, "dist2", "rank"))
-    rect_df = spark.createDataFrame(
-        rects, f"{qid} long, {qx} long, {qy} long, "
-               "x_lo long, x_hi long, y_lo long, y_hi long, d2_max long")
-    # OR-of-boxes over the (merged) rectangles: the predicate that
-    # reaches the parquet scan (PushedFilters) and prunes files/row-groups
-    boxes = _merge_rects([(r[3], r[4], r[5], r[6]) for r in rects],
-                         MAX_SCAN_CLAUSES)
-    cond = None
+    stats = (collect_cell_stats(points, res, px, py)
+             if cell_stats is None else cell_stats)
+    qrows = queries.select(qid, qx, qy).collect()  # small by contract
+    boxes = _merge_rects(
+        _query_rects(qrows, stats, k, dialect.cell_edge_centideg(res)),
+        MAX_SCAN_CLAUSES)
+    cond = F.lit(False)
     for (xl, xh, yl, yh) in boxes:
-        c = ((F.col(px) >= xl) & (F.col(px) <= xh)
-             & (F.col(py) >= yl) & (F.col(py) <= yh))
-        cond = c if cond is None else (cond | c)
-    pruned = points.filter(cond)
-    cand = pruned.join(
-        F.broadcast(rect_df),
-        on=[F.col(px) >= F.col("x_lo"), F.col(px) <= F.col("x_hi"),
-            F.col(py) >= F.col("y_lo"), F.col(py) <= F.col("y_hi")])
-    dist = (F.col(px) - F.col(qx)) ** 2 + (F.col(py) - F.col(qy)) ** 2
-    return _rank_topk(cand.withColumn("dist2", dist.cast("bigint"))
-                      .filter(F.col("dist2") <= F.col("d2_max")),
-                      qid, "dist2", point_id, k)
+        cond = cond | ((F.col(px) >= xl) & (F.col(px) <= xh)
+                       & (F.col(py) >= yl) & (F.col(py) <= yh))
+    return _topk_scan(points.filter(cond), qrows, k, px, py, qid, point_id)

@@ -13,7 +13,8 @@ distributed prefix sum:
 2. per-partition running sums via a window partitioned by
    ``spark_partition_id()`` (parallel, bounded partitions);
 3. per-partition totals (one row per partition — metadata-scale) get
-   their own cumulative offsets and broadcast-join back.
+   their own cumulative offsets from a ``b.pid <= a.pid`` self-join of
+   that tiny table (no unpartitioned window) and broadcast-join back.
 
 Every doc's global offset is then ``partition offset + local running
 sum``, exact and deterministic under any cluster size; seq ids are
@@ -23,14 +24,29 @@ aggregate — the same shape at 32 rows or 10^12.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _with_partition_offset(d: DataFrame, size: Column) -> DataFrame:
+    """Add ``__poff``: the sum of the ``size`` aggregate over every
+    ``__pid`` below the row's own — the second phase of the prefix
+    trick.  The per-partition totals (one row a partition) are summed
+    over ``b.__pid <= a.__pid`` in a self-join, minus the partition's
+    own total, so no window runs unpartitioned and no driver action is
+    taken.  Both join sides read the same (__pid, __ptot) columns, so
+    Spark plans them as one reused exchange."""
+    totals = d.groupBy("__pid").agg(size.alias("__ptot"))
+    a, b = totals.alias("a"), totals.alias("b")
+    offs = (a.join(b, F.col("b.__pid") <= F.col("a.__pid"))
+            .groupBy("a.__pid", "a.__ptot")
+            .agg((F.sum("b.__ptot") - F.col("a.__ptot")).alias("__poff")))
+    return d.join(F.broadcast(offs.select("__pid", "__poff")), "__pid")
 
 
 def pack_sequences(docs: DataFrame, max_len: int,
                    id_col: str = "doc_id",
-                   tok_col: str = "n_tokens",
-                   num_ranges: int | None = None) -> DataFrame:
+                   tok_col: str = "n_tokens") -> DataFrame:
     """Per-doc packing assignment: global token ``offset``, the
     ``seq_start``/``seq_end`` sequence ids the doc lands in (a doc
     crossing a boundary spans several), and ``n_seqs``.
@@ -39,21 +55,12 @@ def pack_sequences(docs: DataFrame, max_len: int,
     with ``n_seqs = 0`` and ``seq_end < seq_start``."""
     if max_len <= 0:
         raise ValueError("max_len must be positive")
-    sel = docs.select(id_col, tok_col)
-    if num_ranges:
-        sel = sel.repartitionByRange(num_ranges, id_col)
-    else:
-        sel = sel.repartitionByRange(id_col)
-    d = sel.withColumn("__pid", F.spark_partition_id())
+    d = (docs.select(id_col, tok_col).repartitionByRange(id_col)
+         .withColumn("__pid", F.spark_partition_id()))
     w = Window.partitionBy("__pid").orderBy(id_col)
     d = d.withColumn(
         "__local", F.sum(tok_col).over(w) - F.col(tok_col))
-    totals = d.groupBy("__pid").agg(F.sum(tok_col).alias("__ptot"))
-    wo = (Window.orderBy("__pid")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = totals.withColumn(
-        "__poff", F.coalesce(F.sum("__ptot").over(wo), F.lit(0)))
-    d = (d.join(F.broadcast(offs.select("__pid", "__poff")), "__pid")
+    d = (_with_partition_offset(d, F.sum(tok_col))
          .withColumn("offset",
                      (F.col("__local") + F.col("__poff")).cast("bigint")))
     n = F.col(tok_col)
@@ -75,20 +82,15 @@ def global_row_ids(df: DataFrame, order_cols: list[str],
     ``repartitionByRange`` puts ranges on ascending partition ids, a
     per-partition ``row_number`` runs in parallel, and the tiny
     per-partition counts get cumulative offsets broadcast back — the
-    same two-phase prefix trick as :func:`pack_sequences`.  Rows must
-    be unique on ``order_cols`` for the assignment to be deterministic;
-    ids are identical to ``row_number() OVER (ORDER BY order_cols)``
-    at any partition count."""
+    same two-phase prefix (``_with_partition_offset``) as
+    :func:`pack_sequences`.  Rows must be unique on ``order_cols`` for
+    the assignment to be deterministic; ids are identical to
+    ``row_number() OVER (ORDER BY order_cols)`` at any partition count."""
     d = (df.repartitionByRange(*order_cols)
          .withColumn("__pid", F.spark_partition_id()))
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     d = d.withColumn("__local", F.row_number().over(w))
-    totals = d.groupBy("__pid").agg(F.count("*").alias("__ptot"))
-    wo = (Window.orderBy("__pid")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = totals.withColumn(
-        "__poff", F.coalesce(F.sum("__ptot").over(wo), F.lit(0)))
-    return (d.join(F.broadcast(offs.select("__pid", "__poff")), "__pid")
+    return (_with_partition_offset(d, F.count("*"))
             .withColumn(out, (F.col("__local") + F.col("__poff"))
                         .cast("int"))
             .drop("__pid", "__local", "__poff"))

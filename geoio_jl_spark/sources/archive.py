@@ -4,9 +4,11 @@ public formats: the PKWARE APPNOTE ZIP layout (EOCD + central
 directory + local headers, stored/deflate members via stdlib zlib) and
 POSIX ustar 512-byte headers.
 
-Shape mirrors ``sources/warc.py``: a whole-archive scan rides
-``binaryFile`` + ``mapInPandas`` (one task per archive — right for
-crawls of many archives), and a cdx-style MEMBER INDEX job
+Shape mirrors ``sources/warc.py``: a whole-archive scan rides its
+``binaryFile`` loader (``warc._files``: one archive or a directory of
+them, an empty directory read as 0 rows) + ``mapInPandas`` (one task
+per archive — right for crawls of many archives), and a cdx-style
+MEMBER INDEX job
 (``zip_index_members``) enables sub-file splits for single large
 archives: the central directory gives exact (offset, length) per
 member, so ``read_zip_indexed`` coalesces contiguous members into
@@ -26,6 +28,8 @@ import zlib
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from geoio_jl_spark.sources.warc import _files
 
 MEMBER_SCHEMA = T.StructType([
     T.StructField("archive", T.StringType()),
@@ -146,16 +150,8 @@ def tar_entries(buf: bytes) -> list[tuple[str, int, int]]:
 # Spark scans
 # ---------------------------------------------------------------------------
 
-def _binary_files(spark: SparkSession, path: str):
-    return (spark.read.format("binaryFile")
-            .load(path.rstrip("/") + ("/*" if os.path.isdir(path)
-                                      else "")))
-
-
 def read_tar(spark: SparkSession, path: str) -> DataFrame:
     """.tar / .tar.gz members -> (archive, name, size, content)."""
-    files = _binary_files(spark, path)
-
     def _parse(batches):
         import gzip as _gz
         for pdf in batches:
@@ -172,15 +168,12 @@ def read_tar(spark: SparkSession, path: str) -> DataFrame:
             yield pd.DataFrame(
                 rows, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
-    return files.select("path", "content").mapInPandas(_parse,
-                                                       MEMBER_SCHEMA)
+    return _files(spark, path).mapInPandas(_parse, MEMBER_SCHEMA)
 
 
 def read_zip(spark: SparkSession, path: str) -> DataFrame:
     """.zip members -> (archive, name, size, content); one task per
     archive (crawl-of-many-zips shape)."""
-    files = _binary_files(spark, path)
-
     def _parse(batches):
         for pdf in batches:
             rows = []
@@ -194,16 +187,13 @@ def read_zip(spark: SparkSession, path: str) -> DataFrame:
             yield pd.DataFrame(
                 rows, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
-    return files.select("path", "content").mapInPandas(_parse,
-                                                       MEMBER_SCHEMA)
+    return _files(spark, path).mapInPandas(_parse, MEMBER_SCHEMA)
 
 
 def zip_index_members(spark: SparkSession, path: str) -> DataFrame:
     """Member-offset index from the central directory — one metadata
     read per archive (the directory sits at the tail), no member
     decompression.  Persist once; read with :func:`read_zip_indexed`."""
-    files = _binary_files(spark, path)
-
     def _index(batches):
         for pdf in batches:
             rows = []
@@ -217,8 +207,7 @@ def zip_index_members(spark: SparkSession, path: str) -> DataFrame:
             yield pd.DataFrame(
                 rows, columns=[f.name for f in ZIP_INDEX_SCHEMA.fields])
 
-    return files.select("path", "content").mapInPandas(
-        _index, ZIP_INDEX_SCHEMA)
+    return _files(spark, path).mapInPandas(_index, ZIP_INDEX_SCHEMA)
 
 
 def read_zip_indexed(spark: SparkSession, path: str,

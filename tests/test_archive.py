@@ -99,6 +99,26 @@ def test_read_zip_and_tar_spark(spark, tmp_path):
     assert trows == {("two.tar.gz", n): v for n, v in members[6:]}
 
 
+def test_read_archive_directory(spark, tmp_path):
+    """A directory is read through the WARC loader: every archive in it,
+    and an empty directory is 0 rows, not PATH_NOT_FOUND."""
+    members = _members(seed=65)
+    d = tmp_path / "zips"
+    d.mkdir()
+    _make_zip(str(d / "a.zip"), members[:5])
+    _make_zip(str(d / "b.zip"), members[5:])
+    rows = {(r["archive"], r["name"])
+            for r in archive.read_zip(spark, str(d)).collect()}
+    assert rows == ({("a.zip", n) for n, _ in members[:5]}
+                    | {("b.zip", n) for n, _ in members[5:]})
+    assert archive.zip_index_members(spark, str(d)).count() == len(members)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for read in (archive.read_zip, archive.read_tar,
+                 archive.zip_index_members):
+        assert read(spark, str(empty)).count() == 0
+
+
 def test_zip_indexed_split_identity(spark, tmp_path):
     """A small split_bytes forces >1 span; rows must be identical to the
     unsplit read and the plan must carry >1 task."""

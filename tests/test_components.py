@@ -106,21 +106,23 @@ def test_dedup_keepers(spark):
                    4: (None, True), 5: (None, True)}
 
 
-def test_dedup_keepers_shuffle_fallback(spark):
-    """Above broadcast_limit the keeper join must not broadcast (a
-    doc-sized component table would OOM executors at web scale)."""
+def test_dedup_keepers_launches_no_job_before_an_action(spark):
+    """Building the keeper join runs no Spark job (no eager count of the
+    component table), and the rows are the component minimum kept."""
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(20), "text": ["t"] * 20}))
     edges = spark.createDataFrame(
         pd.DataFrame({"rep": [0] * 19, "member": range(1, 20)}))
     comp = connected_components(edges)
-    out_b = dedup_keepers(docs, comp)                     # broadcast path
-    out_s = dedup_keepers(docs, comp, broadcast_limit=5)  # fallback path
-    rows_b = sorted(map(tuple, out_b.collect()))
-    rows_s = sorted(map(tuple, out_s.collect()))
-    assert rows_b == rows_s
-    # above the limit the FORCED broadcast hint is gone — Spark's own
-    # size-based planning takes over (which may still broadcast tiny
-    # test tables; at scale a doc-sized table won't qualify)
-    assert "ResolvedHint" in out_b._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in out_s._jdf.queryExecution().analyzed().toString()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("keepers-plan-build", "dedup_keepers plan build")
+    try:
+        out = dedup_keepers(docs, comp)
+        assert tracker.getJobIdsForGroup("keepers-plan-build") == []
+        rows = sorted(map(tuple, out.collect()))
+        assert tracker.getJobIdsForGroup("keepers-plan-build") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows == [(i, "t", 0, i == 0) for i in range(20)]

@@ -43,15 +43,6 @@ def test_planted_overlap_flagged(corpus):
     assert len(out) == 4                    # every input doc present
 
 
-def test_hash_path_matches_string_path(corpus):
-    docs, bench = corpus
-    a = sorted(map(tuple, decontaminate(docs, bench, n=4,
-                                        use_hash=False).collect()))
-    b = sorted(map(tuple, decontaminate(docs, bench, n=4,
-                                        use_hash=True).collect()))
-    assert a == b
-
-
 def test_eval_side_broadcast(corpus):
     """The eval gram set must reach the join as a broadcast — the
     training corpus must not shuffle its grams."""

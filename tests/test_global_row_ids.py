@@ -6,7 +6,8 @@ single-partition global Window (VERDICT r7 item 5).  Pins
 * the STL read's vertex plan carries no unpartitioned WindowExec
   ("Window" with an empty partition spec prints as
   'Window [...], [x ASC ...]' with no PartitionBy — assert the warning
-  trigger, a Window whose partitionBy is empty, is gone entirely).
+  trigger, a Window whose partitionBy is empty, is gone entirely, the
+  per-partition offsets included).
 """
 
 import numpy as np
@@ -14,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from geoio_jl_spark.operators.packing import global_row_ids
+from tests.test_packing import unpartitioned_windows
 
 
 def test_matches_global_row_number(spark):
@@ -52,12 +54,11 @@ def test_stl_read_no_global_window(spark, tmp_path):
     plan = v2._jdf.queryExecution().executedPlan().toString()
     # the ROW-DATA window (row_number over the vertex set) must be
     # partitioned by the range-partition id — never a global sort of
-    # every vertex into one task.  (The per-partition-TOTALS offset
-    # window still runs on <= num_partitions metadata rows, like
-    # pack_sequences — that one is provably small and allowed.)
+    # every vertex into one task — and no other window is unpartitioned
     for line in plan.splitlines():
         if "row_number() windowspecdefinition(" in line:
             assert "__pid" in line, line
+    assert unpartitioned_windows(plan) == []
     # ids still dense and ordered by (x, y, z)
     got = sorted((r["x"], r["y"], r["z"], r["vid"]) for r in v2.collect())
     assert [g[3] for g in got] == [1, 2, 3, 4]

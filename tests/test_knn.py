@@ -58,7 +58,8 @@ def test_tie_break_deterministic(spark):
 def test_partial_keeps_kth_tie_set(spark, parts):
     """40 points tied at one distance from the query, k=5: the map-side
     selection must keep the whole tie set so the (dist2, doc_id) merge
-    returns ids 1..5 at every partition count, like the window plan."""
+    returns ids 1..5 at every partition count, like the window plan —
+    behind the pruned probe's scan filter too."""
     pts = spark.createDataFrame(pd.DataFrame({
         "doc_id": list(range(40, 0, -1)) + list(range(41, 61)),
         "lon_i": [100] * 40 + [900] * 20, "lat_i": [100] * 60,
@@ -68,8 +69,19 @@ def test_partial_keeps_kth_tie_set(spark, parts):
     expect = [(0, i, 1, i) for i in range(1, 6)]
     window = sorted(map(tuple, KNN.knn_join_window(pts, qs, k=5).collect()))
     partial = sorted(map(tuple, KNN.knn_join_partial(pts, qs, k=5).collect()))
+    pruned = sorted(map(tuple, KNN.knn_join_pruned(pts, qs, k=5).collect()))
     assert window == expect
     assert partial == expect
+    assert pruned == expect
+
+
+def test_empty_query_batch(spark):
+    pts = _points(spark, n=100)
+    qs = _queries(spark).filter("query_id < 0")
+    for fn in (KNN.knn_join_partial, KNN.knn_join_pruned):
+        out = fn(pts, qs, k=3)
+        assert out.count() == 0
+        assert out.columns == ["query_id", "doc_id", "dist2", "rank"]
 
 
 def test_pruned_equals_window(spark):
@@ -129,11 +141,10 @@ def test_pruned_dense_cluster_ring_zero(spark):
     b = KNN.knn_join_pruned(pts, qs, k=5).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     # the global rect covers <= (2*2*400)^2 coords ≈ tiny vs full extent
-    from geoio_jl_spark.operators.knn import _query_rects, cell_count_stats
-    stats = {(r["cx"], r["cy"]): r["n"]
-             for r in cell_count_stats(pts, 3).collect()}
-    (qid, qx, qy, x_lo, x_hi, y_lo, y_hi, d2) = _query_rects(
-        [(0, 5000, 5000)], stats, 5, 400)[0]
+    from geoio_jl_spark.operators.knn import _query_rects, collect_cell_stats
+    stats = collect_cell_stats(pts, 3)
+    (x_lo, x_hi, y_lo, y_hi), = _query_rects(
+        [(0, 5000, 5000)], stats, 5, 400)
     assert x_hi - x_lo <= 4 * 400  # ring 0 far corner < 2 cells each way
 
 
@@ -146,7 +157,7 @@ def test_pruned_scan_is_file_pruned(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from geoio_jl_spark.operators.knn import _query_rects, cell_count_stats
+    from geoio_jl_spark.operators.knn import _query_rects, collect_cell_stats
     from geoio_jl_spark.operators.zorder import write_spatially_clustered
 
     pts = _points(spark, n=200_000)
@@ -166,10 +177,9 @@ def test_pruned_scan_is_file_pruned(spark, tmp_path):
     assert "GreaterThanOrEqual(lon_i" in plan and "LessThanOrEqual(lon_i" in plan
     # 3) footer stats: few files overlap the rectangle on the clustered
     # layout (the scan skips the rest)
-    stats = {(r["cx"], r["cy"]): r["n"]
-             for r in cell_count_stats(stored, 3).collect()}
-    rect = _query_rects([(0, 5000, 5000)], stats, 5, 400)[0]
-    x_lo, x_hi, y_lo, y_hi = rect[3], rect[4], rect[5], rect[6]
+    stats = collect_cell_stats(stored, 3)
+    (x_lo, x_hi, y_lo, y_hi), = _query_rects(
+        [(0, 5000, 5000)], stats, 5, 400)
     overlapping = 0
     files = glob.glob(path + "/*.parquet")
     for f in files:
@@ -224,7 +234,7 @@ def test_pruned_dispersed_batches_or_pushdown(spark, tmp_path):
     rects = _query_rects(
         [(r["query_id"], r["qx"], r["qy"]) for r in qs.collect()],
         stats, 5, 400)
-    boxes = _merge_rects([(r[3], r[4], r[5], r[6]) for r in rects], 32)
+    boxes = _merge_rects(rects, 32)
     assert len(boxes) == 2
     # footer evidence: files overlapping ANY box << all files, and
     # strictly fewer than the single-global-rect union would touch
@@ -254,6 +264,29 @@ def test_pruned_dispersed_batches_or_pushdown(spark, tmp_path):
                  min(b[2] for b in boxes), max(b[3] for b in boxes))
     assert n_overlapping([union_box]) == len(files)  # global rect: no pruning
     assert n_overlapping(boxes) <= max(4, len(files) // 3)
+
+
+def test_pruned_plan_is_filtered_partial_scan(spark, tmp_path):
+    """The pruned probe is the partial plan behind a scan filter: the
+    OR-of-boxes reaches the parquet scan as PushedFilters, the top-k is
+    the same MapInPandas + rank Window, and no rectangle table is
+    broadcast or range-joined."""
+    path = str(tmp_path / "pts")
+    _points(spark).write.parquet(path)
+    stored = spark.read.parquet(path)
+    qs = spark.createDataFrame(pd.DataFrame({
+        "query_id": [0, 1], "qx": [1200, 34800], "qy": [1100, 16400]}))
+    pruned = KNN.knn_join_pruned(stored, qs, k=5)
+    partial = KNN.knn_join_partial(stored, qs, k=5)
+    assert (sorted(map(tuple, pruned.collect()))
+            == sorted(map(tuple, partial.collect())))
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    partial_plan = partial._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [Or(" in plan, plan
+    for node in ("MapInPandas", "Window"):
+        assert node in plan and node in partial_plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_merge_rects_cap_and_fixpoint():

@@ -40,12 +40,3 @@ def test_score_no_python_crossing(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan
     assert "Exchange" not in plan, plan
-
-
-def test_fast_hash_variant_deterministic(spark):
-    import pandas as pd
-    docs = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1], "text": ["a b c d e"]}))
-    a = Q.hashed_bigram_score(docs, fast_hash=True).collect()[0]["quality"]
-    b = Q.hashed_bigram_score(docs, fast_hash=True).collect()[0]["quality"]
-    assert a == b and 0.0 <= a <= 1.0
